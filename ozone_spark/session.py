@@ -8,9 +8,12 @@ all timestamps are pinned to UTC so results are cluster-independent.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 # Runtime-settable SQL confs applied to *any* session we are handed
 # (the driver owns its own SparkSession — see apply_runtime_confs).
@@ -35,14 +38,27 @@ RUNTIME_CONFS = {
     # HOST (AB_r12: container_key_index / record_linkage arms equal),
     # so there is no regression the flip would fix.  Both knobs stay
     # env-tunable for deployments whose shuffles are byte-bound (guide
-    # §2.2: size partitions 100 MB-1 GB at cluster scale).
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst":
-        os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes":
-        os.environ.get("SPARK_GRAFT_AQE_ADVISORY", "64m"),
+    # §2.2: size partitions 100 MB-1 GB at cluster scale; ENV_TUNABLES).
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
     # Arrow for the (rare) pandas-UDF paths — vectorized transfer
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
+
+# conf -> the env var that overrides its RUNTIME_CONFS default
+ENV_TUNABLES = {
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst":
+        "SPARK_GRAFT_AQE_PARALLELISM_FIRST",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes":
+        "SPARK_GRAFT_AQE_ADVISORY",
+}
+
+
+def runtime_confs() -> dict[str, str]:
+    """RUNTIME_CONFS with the env tunables read now, so a variable set
+    after import takes effect on the next session built or handed in."""
+    return {k: os.environ.get(ENV_TUNABLES[k], v) if k in ENV_TUNABLES else v
+            for k, v in RUNTIME_CONFS.items()}
 
 
 _shipped_contexts: set[int] = set()
@@ -66,17 +82,19 @@ def _ship_package(spark: SparkSession) -> None:
                                        os.path.dirname(pkg_dir), "ozone_spark")
         sc.addPyFile(zip_path)
     except Exception:
-        pass  # UDF-free queries work regardless
+        log.warning("could not ship ozone_spark to executors; UDF-free "
+                    "queries work, pandas-UDF ones may not", exc_info=True)
     _shipped_contexts.add(key)
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an externally-owned session."""
-    for k, v in RUNTIME_CONFS.items():
+    for k, v in runtime_confs().items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on this session; builder path sets it instead
+        except Exception as e:
+            # static conf on this session; the builder path sets it instead
+            log.warning("could not set %s=%s on this session: %s", k, v, e)
     _ship_package(spark)
     return spark
 
@@ -97,7 +115,7 @@ def get_spark(app_name: str = "ozone-spark", cpus: int | None = None) -> SparkSe
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )
-    for k, v in RUNTIME_CONFS.items():
+    for k, v in runtime_confs().items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -156,25 +156,25 @@ class IncrementalViewStore:
     below is a local-fs rename; on an object store it becomes the usual
     staged-commit/manifest protocol).
 
-    Two merge modes:
-      - "fold": delta rows are signed measure deltas, summed into the
-        view; rows whose measures all reach zero are dropped (the
-        reference deletes emptied histogram rows the same way).
-      - "replace": delta rows are the new absolute state per key (the
-        applyInPandasWithState output shape); latest row wins, and
-        all-zero rows are dropped.
+    Delta rows are signed measure deltas, summed into the view; rows
+    whose measures all reach zero are dropped (the reference deletes
+    emptied histogram rows the same way).
+
+    A fold is not idempotent, so a merge tagged with a micro-batch id
+    records that id in `_last_batch_id` (the leading `_` hides it from
+    the parquet reader) and a later merge with an id at or below it is
+    skipped: a batch the stream replays after a failure before its
+    commit is folded once.  The id is written after the bucket swap.
     """
 
     def __init__(self, spark: SparkSession, path: str, group_cols: list[str],
-                 measure_cols: list[str], n_buckets: int = 16,
-                 mode: str = "fold"):
-        assert mode in ("fold", "replace")
+                 measure_cols: list[str], n_buckets: int = 16):
         self.spark = spark
         self.path = path
         self.group_cols = group_cols
         self.measure_cols = measure_cols
         self.n_buckets = n_buckets
-        self.mode = mode
+        self._batch_marker = os.path.join(path, "_last_batch_id")
 
     def _bucket_expr(self) -> F.Column:
         return F.pmod(F.xxhash64(*self.group_cols), F.lit(self.n_buckets))
@@ -188,31 +188,39 @@ class IncrementalViewStore:
             return None
         return self.spark.read.parquet(self.path).drop("view_bucket")
 
-    def merge(self, delta: DataFrame) -> None:
+    def last_batch_id(self) -> int:
+        """The id of the last micro-batch merged, or -1."""
+        if not os.path.exists(self._batch_marker):
+            return -1
+        with open(self._batch_marker) as f:
+            return int(f.read())
+
+    def merge(self, delta: DataFrame, batch_id: int | None = None) -> None:
+        if batch_id is not None and batch_id <= self.last_batch_id():
+            return  # a replayed micro-batch: already folded in
         delta = delta.withColumn("view_bucket", self._bucket_expr())
         touched = sorted(
             r[0] for r in delta.select("view_bucket").distinct().collect())
-        if not touched:
-            return
-        cur = None
+        if touched:
+            self._fold_buckets(delta, touched)
+        if batch_id is not None:
+            os.makedirs(self.path, exist_ok=True)
+            tmp = self._batch_marker + ".tmp"
+            with open(tmp, "w") as f:
+                f.write(str(batch_id))
+            os.replace(tmp, self._batch_marker)
+
+    def _fold_buckets(self, delta: DataFrame, touched: list[int]) -> None:
+        merged = delta
         if self._has_data():
             # partition-pruned read: untouched buckets are never scanned
-            cur = (self.spark.read.parquet(self.path)
-                   .where(F.col("view_bucket").isin(touched)))
-        if cur is None:
-            merged = delta
-        elif self.mode == "fold":
-            merged = cur.unionByName(delta)
-        else:  # replace: the delta's row for a key supersedes the stored one
-            merged = (cur.join(delta.select(*self.group_cols),
-                               self.group_cols, "left_anti")
+            merged = (self.spark.read.parquet(self.path)
+                      .where(F.col("view_bucket").isin(touched))
                       .unionByName(delta))
-        if self.mode == "fold":
-            merged = merged.groupBy(*self.group_cols).agg(
-                *[F.sum(c).alias(c) for c in self.measure_cols])
         folded = (
-            merged.where(" OR ".join(f"{c} != 0" for c in self.measure_cols))
-            .select(*self.group_cols, *self.measure_cols)
+            merged.groupBy(*self.group_cols)
+            .agg(*[F.sum(c).alias(c) for c in self.measure_cols])
+            .where(" OR ".join(f"{c} != 0" for c in self.measure_cols))
             .withColumn("view_bucket", self._bucket_expr())
         )
         tmp = self.path + ".tmpbatch"
@@ -236,7 +244,7 @@ def run_incremental_view(spark: SparkSession, cdc_dir: str,
     runner; every maintained view below is one delta function."""
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        store.merge(delta_fn(batch_df))
+        store.merge(delta_fn(batch_df), batch_id)
 
     q = (
         read_cdc_stream(spark, cdc_dir)

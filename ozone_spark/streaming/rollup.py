@@ -1,48 +1,37 @@
-"""Incremental namespace rollup as a custom stateful streaming operator
-(SURVEY.md §2.4 A4 + §2.8 ST4 — the one piece Catalyst does not give us
-for free, per §4).
+"""Incremental namespace rollup (SURVEY.md §2.4 A4 + §2.8 ST4): the
+NSSummary view maintained as one more delta function on the CDC fold
+path (`cdc.run_incremental_view` + `IncrementalViewStore`).
 
 Reference: NSSummaryTaskDbEventHandler.java:128-161 (per-event handlers)
 and :426-449 (propagateSizeUpwards) — every key PUT/DELETE updates the
 NSSummary node of each ancestor directory.  The reference walks parent
-pointers per event against RocksDB; the Spark-native operator instead:
+pointers per event against RocksDB; the Spark-native view instead:
 
   1. explodes each CDC event into (ancestor dir_path, signed deltas) —
      the propagation set, computed declaratively;
-  2. groups the stream by dir_path and folds the deltas into per-key
-     state with applyInPandasWithState (the mapGroupsWithState analog,
-     Arrow-batched);
-  3. emits the updated NSSummary row for every touched directory each
-     micro-batch.
+  2. sums the deltas per dir_path within the micro-batch (a partial +
+     final HashAggregate: the measures are plain sums, so they
+     decompose and no per-key user state is needed);
+  3. folds the per-directory sums into the bucketed view store, which
+     drops directories whose measures all reach zero (emptied dirs).
 
-State is partitioned by dir_path — at 100 TB the state store shards
-across executors with no skew beyond the namespace's own shape (bucket
-roots are the hottest keys, bounded by #buckets).
+The view store is partitioned by dir_path — at 100 TB a micro-batch
+rewrites only the hash buckets its directories fall in, and the
+hottest keys (bucket roots) are bounded by #buckets.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType, StringType, StructField, StructType,
 )
 
-from ozone_spark.streaming.cdc import read_cdc_stream
+from ozone_spark.streaming.cdc import IncrementalViewStore, run_incremental_view
 
 ROLLUP_SCHEMA = StructType([
     StructField("dir_path", StringType()),
-    StructField("num_files", LongType()),
-    StructField("size_of_files", LongType()),
-    StructField("replicated_size", LongType()),
-])
-
-STATE_SCHEMA = StructType([
     StructField("num_files", LongType()),
     StructField("size_of_files", LongType()),
     StructField("replicated_size", LongType()),
@@ -65,54 +54,28 @@ def ancestor_deltas(events: DataFrame) -> DataFrame:
     return explode_ancestors(deltas, ["d_files", "d_size", "d_repl"])
 
 
-def _fold(key: Any, pdfs: Iterator[pd.DataFrame],
-          state: GroupState) -> Iterator[pd.DataFrame]:
-    """Step 2: per-dir state fold (self-contained closure — executors
-    don't import ozone_spark)."""
-    nf, sz, rp = state.get if state.exists else (0, 0, 0)
-    for pdf in pdfs:
-        nf += int(pdf["d_files"].sum())
-        sz += int(pdf["d_size"].sum())
-        rp += int(pdf["d_repl"].sum())
-    state.update((nf, sz, rp))
-    yield pd.DataFrame({
-        "dir_path": [key[0]],
-        "num_files": [nf],
-        "size_of_files": [sz],
-        "replicated_size": [rp],
-    })
+def rollup_delta(events: DataFrame) -> DataFrame:
+    """Step 2: the ST4 process() delta — signed NSSummary measures per
+    ancestor directory."""
+    return ancestor_deltas(events).groupBy("dir_path").agg(
+        F.sum("d_files").alias("num_files"),
+        F.sum("d_size").alias("size_of_files"),
+        F.sum("d_repl").alias("replicated_size"),
+    )
 
 
 def run_incremental_rollup(spark: SparkSession, cdc_dir: str,
                            checkpoint_dir: str,
                            store_path: str | None = None) -> DataFrame:
-    """Drain the CDC log maintaining the rollup statefully; returns the
-    final NSSummary table.  Each micro-batch's updated directory rows
-    are merged into a bucket-partitioned parquet store (replace-by-key —
-    the Recon async-flusher analog, NSSummaryAsyncFlusher): state scales
-    with the executors' state store and the view with the parquet store;
-    nothing is ever collected to the driver."""
-    from ozone_spark.streaming.cdc import IncrementalViewStore
-
-    stream = ancestor_deltas(read_cdc_stream(spark, cdc_dir))
-    updated = stream.groupBy("dir_path").applyInPandasWithState(
-        _fold, ROLLUP_SCHEMA, STATE_SCHEMA, "update",
-        GroupStateTimeout.NoTimeout)
-
+    """Drain the CDC log into the rollup view; returns the final
+    NSSummary table.  Each micro-batch's per-directory deltas are folded
+    into a bucket-partitioned parquet store (the Recon async-flusher
+    analog, NSSummaryAsyncFlusher): the view scales with the parquet
+    store, and nothing is ever collected to the driver."""
     store = IncrementalViewStore(
         spark, store_path or checkpoint_dir.rstrip("/") + "_view",
-        ["dir_path"], ["num_files", "size_of_files", "replicated_size"],
-        mode="replace")
-
-    q = (
-        updated.writeStream.foreachBatch(
-            lambda batch_df, _bid: store.merge(batch_df))
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        ["dir_path"], ["num_files", "size_of_files", "replicated_size"])
+    run_incremental_view(spark, cdc_dir, store, checkpoint_dir, rollup_delta)
     cur = store.current()
     if cur is None:
         return spark.createDataFrame([], ROLLUP_SCHEMA)

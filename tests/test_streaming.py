@@ -68,9 +68,10 @@ def test_cdc_resume_from_checkpoint(spark, sf_dir, tmpdir):
     assert status["never_ran"].last_batch_id == -1
 
 
-def test_stateful_rollup_matches_batch(spark, sf_dir, tmpdir):
-    """A4 incremental (applyInPandasWithState) == batch ancestors-explode
-    rollup of the final key state (NSSummary propagate contract)."""
+def test_incremental_rollup_matches_batch(spark, sf_dir, tmpdir):
+    """A4 incremental (signed ancestor deltas folded into the view
+    store) == batch ancestors-explode rollup of the final key state
+    (NSSummary propagate contract)."""
     from ozone_spark.operators.namespace import namespace_rollup
     from ozone_spark.streaming import rollup as sroll
 
@@ -82,6 +83,93 @@ def test_stateful_rollup_matches_batch(spark, sf_dir, tmpdir):
     keys_now = keys.join(deleted.select("object_id"), "object_id", "left_anti")
     expected = namespace_rollup(keys_now)
     assert canon(got.toPandas()) == canon(expected.toPandas())
+
+
+def test_incremental_rollup_drops_emptied_directories(spark, tmpdir):
+    """DELETEs in later chunks empty whole directories (a nested dir,
+    its parent, and every dir of one bucket): their rows fold to all
+    zeros and leave the view, which equals the batch rollup of the
+    surviving keys."""
+    from ozone_spark.operators.namespace import namespace_rollup
+    from ozone_spark.streaming import rollup as sroll
+
+    sizes = {("b1", "a/x1"): 10, ("b1", "a/x2"): 20, ("b1", "a/sub/y1"): 5,
+             ("b1", "c/z1"): 7, ("b1", "top"): 3, ("b2", "d/e/f"): 11}
+    deleted_in = {("b1", "a/x1"): 1, ("b1", "a/sub/y1"): 1,
+                  ("b1", "a/x2"): 2, ("b2", "d/e/f"): 2}
+    rows = []
+    for oid, ((bucket, key), size) in enumerate(sorted(sizes.items())):
+        rows.append(("PUT", bucket, key, oid, size, 0))
+        if (bucket, key) in deleted_in:
+            rows.append(("DELETE", bucket, key, oid, size,
+                         deleted_in[(bucket, key)]))
+    log = spark.createDataFrame(
+        [(seq, op, f"/vol1/{b}/{k}", "vol1", b, k, oid, size, 3 * size,
+          seq, chunk)
+         for seq, (op, b, k, oid, size, chunk) in enumerate(rows, start=1)],
+        "seq long, op string, db_key string, volume string, bucket string,"
+        " key_name string, object_id long, data_size long,"
+        " replicated_size long, event_time long, chunk int")
+    log.repartition(1).write.partitionBy("chunk").parquet(f"{tmpdir}/cdc")
+
+    got = sroll.run_incremental_rollup(spark, f"{tmpdir}/cdc", f"{tmpdir}/ck")
+
+    dirs = {r.dir_path for r in got.collect()}
+    assert dirs == {"/vol1/b1", "/vol1/b1/c"}
+    keys_now = log.where("op = 'PUT'").join(
+        log.where("op = 'DELETE'").select("object_id"), "object_id",
+        "left_anti")
+    assert canon(got.toPandas()) == \
+        canon(namespace_rollup(keys_now).toPandas())
+
+
+def test_rollup_replayed_batch_folds_once(spark, sf_dir, tmpdir):
+    """A fold is not idempotent, so the view store skips a micro-batch
+    id it has already merged: a plain re-run on the same checkpoint is a
+    no-op, and a batch the stream replays (its commit lost after the
+    merge) is not folded twice."""
+    import os
+
+    from ozone_spark.operators.namespace import namespace_rollup
+    from ozone_spark.streaming import rollup as sroll
+
+    t = tables.namespace_views(spark, sf_dir)
+    keys, deleted = t["keys"], t["deleted_keys"]
+    cdc.synthesize_cdc_log(keys, deleted, f"{tmpdir}/cdc", n_chunks=3)
+    keys_now = keys.join(deleted.select("object_id"), "object_id", "left_anti")
+    expected = canon(namespace_rollup(keys_now).toPandas())
+
+    def drain():
+        return canon(sroll.run_incremental_rollup(
+            spark, f"{tmpdir}/cdc", f"{tmpdir}/ck",
+            f"{tmpdir}/view").toPandas())
+
+    assert drain() == expected
+    assert drain() == expected  # resumes at the committed offset
+    # drop the last commit: the restarted stream replays that batch id
+    commits = f"{tmpdir}/ck/commits"
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in (str(last), f".{last}.crc"):
+        if os.path.exists(f"{commits}/{f}"):
+            os.remove(f"{commits}/{f}")
+    assert drain() == expected
+    assert os.path.exists(f"{commits}/{last}")  # the replay did run
+
+
+def test_view_store_skips_replayed_batch_id(spark, tmpdir):
+    """Handing the fold store the same batch id twice leaves it
+    unchanged; the id marker is invisible to the parquet reader."""
+    store = cdc.IncrementalViewStore(spark, f"{tmpdir}/store", ["k"], ["v"])
+    delta = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v long")
+    assert store.last_batch_id() == -1
+    store.merge(delta, 0)
+    store.merge(delta, 0)
+    assert {r.k: r.v for r in store.current().collect()} == {"a": 1, "b": 2}
+    store.merge(delta, 1)
+    store.merge(delta, 1)
+    store.merge(delta, 0)
+    assert {r.k: r.v for r in store.current().collect()} == {"a": 2, "b": 4}
+    assert store.last_batch_id() == 1
 
 
 def test_cdc_incremental_container_index_matches_batch(spark, sf_dir, tmpdir):
