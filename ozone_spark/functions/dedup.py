@@ -4,18 +4,28 @@
 Scale design:
   - exact dedup = hash-groupBy on a fingerprint — one shuffle keyed by
     the hash, uniform by construction.
-  - n-gram Jaccard = shingle explode -> self-join on shingle -> pair
-    aggregation.  Hot shingles explode pair counts quadratically, so the
-    shingle->docs buckets are capped (`max_bucket`) exactly like LSH
-    implementations drop saturated bands at web scale.
+  - every near-dup family (n-gram shingles, MinHash bands, SimHash
+    blocks, winnowing fingerprints, sampled saturated buckets) shares
+    ONE capped-bucket pair kernel: `_capped_buckets` groups ids by a
+    bucket key and keeps buckets of 2..cap ids (hot keys explode pairs
+    quadratically, so saturated buckets are dropped exactly like LSH
+    implementations drop saturated bands at web scale), `_pair_expr`
+    explodes each sorted bucket into its (a, b) pairs, and
+    `_bucket_pairs` chains the two into a groupBy(a, b) ready for the
+    caller's count.  `_hashed_shingles` is the one slot-cached
+    (doc_id, xxhash64 shingle) table the shingle consumers share, and
+    `_with_sizes` the one size join under both n-gram ratios.
+  - n-gram Jaccard / containment = the kernel over hashed shingles ->
+    per-pair shared-shingle count -> size join -> ratio.
   - MinHash+LSH: ONE md5-derived 28-bit base hash per shingle, then 32
     Carter-Wegman permutations `(a_i*h + b_i) mod 2^31-1` (universal
     hashing — the standard MinHash construction), banded into 8 bands
-    of 4; candidate pairs = equi-join on (band, band-signature) — never
-    an all-pairs product; verified by estimated Jaccard afterwards.
+    of 4; candidate pairs = the kernel over (band, band-signature)
+    buckets — never an all-pairs product; verified by estimated
+    Jaccard afterwards.
   - SimHash: 60-bit signature from per-token md5-derived hashes;
-    near-dups = pairs sharing a 15-bit block (block permutation trick)
-    within Hamming radius.
+    near-dups = the kernel over shared 15-bit blocks (block
+    permutation trick), verified within Hamming radius.
 
 Everything is built-in-function only (md5/conv/explode/groupBy) —
 JVM-side, no Python in the hot path.  All hash math is integer-exact
@@ -26,10 +36,13 @@ operator is value-checked against SQL, not just row-counted.
 
 from __future__ import annotations
 
+import logging
 import weakref
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, GroupedData, Window
+
+log = logging.getLogger(__name__)
 
 N_PERM = 32          # minhash permutations
 N_BANDS = 8          # LSH bands (4 rows each)
@@ -125,7 +138,9 @@ def _spread(df: DataFrame) -> DataFrame:
         memo = _NPARTS_MEMO.setdefault(sess, {})
         key = (df.semanticHash(), target)
         n = memo.get(key)
-    except Exception:
+    except Exception as e:
+        log.warning("partition-count memo unavailable, probing the plan "
+                    "directly: %s", e)
         memo = None
     if n is None:
         n = df.rdd.getNumPartitions()
@@ -207,13 +222,17 @@ def _slot_cache(df: DataFrame, slot: str) -> DataFrame:
                 if not (sl.useMemory or sl.useDisk or sl.useOffHeap):
                     old.persist()
                 return old
-        except Exception:
-            pass  # e.g. old frame's session is gone — fall through
+        except Exception as e:
+            # e.g. old frame's session is gone — fall through
+            log.warning("cache slot %r: plan comparison failed, evicting "
+                        "and re-persisting: %s", slot, e)
         _CACHE_SLOTS.pop(slot, None)
         try:
             old.unpersist()
-        except Exception:
-            pass  # dead session — the frame is already gone
+        except Exception as e:
+            # dead session — the frame is already gone
+            log.warning("cache slot %r: unpersist of the evicted frame "
+                        "failed: %s", slot, e)
     stats[1] += 1
     df.persist()
     _CACHE_SLOTS[slot] = df
@@ -246,15 +265,20 @@ def release_slots(*prefixes: str) -> list:
                 if f.sameSemantics(k):
                     twin = True
                     break
-            except Exception:
-                continue  # a dead kept frame can't be anyone's twin
+            except Exception as e:
+                # a dead kept frame can't be anyone's twin
+                log.warning("release of cache slot %r: plan comparison "
+                            "with a kept slot failed: %s", s, e)
+                continue
         if twin:
             continue
         try:
             f.unpersist()
-        except Exception:
-            pass  # dead session frame (ADVICE r10 low #1): one broken
+        except Exception as e:
+            # dead session frame (ADVICE r10 low #1): one broken
             # unpersist must not abort the release of the rest
+            log.warning("release of cache slot %r: unpersist failed: %s",
+                        s, e)
     return hit
 
 
@@ -427,6 +451,86 @@ def word_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     return d.select("doc_id", F.explode(shingles).alias("shingle"))
 
 
+# ---- the capped-bucket pair kernel ---------------------------------------
+# Every near-dup family pairs ids that share a bucket (a shingle, an LSH
+# band bucket, a SimHash block, a winnowing fingerprint, a sampled
+# saturated shingle).  The parts below are the one implementation of
+# that step; callers whose buckets have another shape (weighted struct
+# buckets, collect_set buckets, a self-pair guard) take only the parts
+# that fit them.
+
+
+def _hashed_shingles(docs: DataFrame, n: int, slot: str) -> DataFrame:
+    """The slot-cached (doc_id, shingle) table with shingles hashed to
+    int64: 8-byte shuffle keys, negligible collisions.  One slot feeds
+    every consumer of the same corpus (pairs, containment, cap audits)."""
+    return _slot_cache(
+        word_shingles(docs, n)
+        .select("doc_id", F.xxhash64("shingle").alias("shingle")),
+        slot)
+
+
+def _pair_expr(ds: str = "ds", field: str = "") -> Column:
+    """Explode input: every (a, b) with a at an EARLIER POSITION than b
+    in the sorted bucket array `ds` — C(size, 2) structs, so an id that
+    occurs twice in one bucket yields an (id, id) self-pair.  `field`
+    (e.g. ".doc_id") pairs one field of struct elements.  Built lazily:
+    F.expr needs an active SparkContext, and this module imports before
+    any session exists."""
+    return F.expr(
+        f"flatten(transform({ds}, (x, i) -> "
+        f"transform(slice({ds}, i + 2, size({ds})), "
+        f"y -> struct(x{field} AS a, y{field} AS b))))")
+
+
+def _capped_buckets(rows: DataFrame, keys: list, cap,
+                    carry: tuple = ()) -> DataFrame:
+    """The capped inverted index: `rows`' doc_ids grouped by `keys`,
+    buckets of 2..`cap` ids (inclusive; `cap` may be a Column) kept and
+    sorted as `ds`, with the `carry` key columns alongside."""
+    return (
+        rows.groupBy(*keys).agg(F.collect_list("doc_id").alias("ds"))
+        .where((F.size("ds") >= 2) & (F.size("ds") <= cap))
+        .select(*carry, F.array_sort("ds").alias("ds"))
+    )
+
+
+def _bucket_pairs(rows: DataFrame, keys: list, cap,
+                  carry: tuple = ()) -> GroupedData:
+    """The capped index's in-bucket pairs grouped by (doc_a, doc_b),
+    `carry` columns alongside — the caller picks the aggregate (a shared
+    bucket count, a first band, ...)."""
+    return (
+        _capped_buckets(rows, keys, cap, carry)
+        .select(*carry, F.explode(_pair_expr()).alias("p"))
+        .groupBy(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
+    )
+
+
+def _jaccard() -> Column:
+    return F.col("n_common").cast("double") / (
+        F.col("n_a") + F.col("n_b") - F.col("n_common"))
+
+
+def _with_sizes(pairs: DataFrame, sh: DataFrame) -> DataFrame:
+    """Attach both docs' distinct-shingle counts (n_a, n_b) from the
+    hashed-shingle table `sh` to a (doc_a, doc_b, ...) pair frame."""
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
+    return pairs.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def _shingle_overlap(docs: DataFrame, n: int, max_bucket: int,
+                     slot: str) -> tuple:
+    """(hashed-shingle table, capped pairs with n_common, n_a, n_b) —
+    the shared body of the n-gram Jaccard and containment ratios."""
+    sh = _hashed_shingles(docs, n, slot)
+    common = _bucket_pairs(sh, ["shingle"], max_bucket) \
+        .agg(F.count("*").alias("n_common"))
+    return sh, _with_sizes(common, sh)
+
+
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
                         threshold: float = 0.5,
                         max_bucket: int = 200,
@@ -479,35 +583,13 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
     corpora should run the exact pass first and resolve through
     `duplicate_clusters`, which contracts before the quadratic
     stages."""
-    # shingles hashed to int64: 8-byte shuffle keys, negligible collisions
-    sh = _slot_cache(
-        word_shingles(docs, n)
-        .select("doc_id", F.xxhash64("shingle").alias("shingle")),
-        slot)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    buckets = (
-        sh.groupBy("shingle").agg(F.collect_list("doc_id").alias("ds"))
-        .where((F.size("ds") >= 2) & (F.size("ds") <= max_bucket))
-        .select(F.array_sort("ds").alias("ds"))
-    )
-    pair_expr = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> struct(x AS a, y AS b))))"
-    )
-    common = (
-        buckets.select(F.explode(pair_expr).alias("p"))
-        .groupBy(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    jac = F.col("n_common").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_common"))
+    sh, scored = _shingle_overlap(docs, n, max_bucket, slot)
+    jac = _jaccard()
     # threshold applies to the UNROUNDED ratio (rounding is display-
     # only), matching the oracle's WHERE — the same cross-engine cutoff
     # divergence ADVICE r4 flagged on the chunk-dedup path
     capped = (
-        common.join(sa, "doc_a").join(sb, "doc_b")
+        scored
         .where(jac >= threshold)
         .withColumn("jaccard", F.round(jac, 6))
         .select("doc_a", "doc_b", "n_common", "jaccard")
@@ -546,7 +628,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
         # slot-cached for the same reason: the union and the anti-join
         # both reference it
         recovered = _slot_cache(
-            exact.join(sa, "doc_a").join(sb, "doc_b")
+            _with_sizes(exact, sh)
             .where(jac >= threshold)
             .withColumn("jaccard", F.round(jac, 6))
             .select("doc_a", "doc_b", "n_common", "jaccard"),
@@ -572,36 +654,14 @@ def containment_pairs(docs: DataFrame, n: int = 3,
     shingle table, same capped inverted-index bucket explode, same two
     shuffles) — only the final ratio differs, so running both costs one
     extra join over the pair list, not a second index build."""
-    sh = _slot_cache(
-        word_shingles(docs, n)
-        .select("doc_id", F.xxhash64("shingle").alias("shingle")),
-        "ngram_sh")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    buckets = (
-        sh.groupBy("shingle").agg(F.collect_list("doc_id").alias("ds"))
-        .where((F.size("ds") >= 2) & (F.size("ds") <= max_bucket))
-        .select(F.array_sort("ds").alias("ds"))
-    )
-    pair_expr = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> struct(x AS a, y AS b))))"
-    )
-    common = (
-        buckets.select(F.explode(pair_expr).alias("p"))
-        .groupBy(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
+    _, scored = _shingle_overlap(docs, n, max_bucket, "ngram_sh")
     cont = F.col("n_common").cast("double") / F.least("n_a", "n_b")
-    jac = F.col("n_common").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_common"))
     return (
-        common.join(sa, "doc_a").join(sb, "doc_b")
+        scored
         .where(cont >= threshold)
         .select("doc_a", "doc_b", "n_common",
                 F.round(cont, 6).alias("containment"),
-                F.round(jac, 6).alias("jaccard"))
+                F.round(_jaccard(), 6).alias("jaccard"))
         .orderBy("doc_a", "doc_b")
     )
 
@@ -658,10 +718,7 @@ def contracted_pair_graph(docs: DataFrame, n: int = 3,
     rep_docs = docs.select("doc_id", "text").join(
         groups.select(F.col("rep").alias("r_doc")),
         F.col("doc_id") == F.col("r_doc")).select("doc_id", "text")
-    sh = _slot_cache(
-        word_shingles(rep_docs, n)
-        .select("doc_id", F.xxhash64("shingle").alias("shingle")),
-        slot + "_sh")
+    sh = _hashed_shingles(rep_docs, n, slot + "_sh")
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     # weighted index: each bucket row carries (rep, copy count); the
     # cap tests the MEMBER size (sum of weights), matching member-level
@@ -676,14 +733,9 @@ def contracted_pair_graph(docs: DataFrame, n: int = 3,
         .select(F.array_sort("ds").alias("ds"))
     )
     buckets = _slot_cache(buckets, slot + "_buckets")
-    pair_expr = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), "
-        "y -> struct(x.doc_id AS a, y.doc_id AS b))))"
-    )
     common = (
         buckets.where(F.size("ds") >= 2)
-        .select(F.explode(pair_expr).alias("p"))
+        .select(F.explode(_pair_expr(field=".doc_id")).alias("p"))
         .groupBy(F.col("p.a").alias("rep_a"), F.col("p.b").alias("rep_b"))
         .agg(F.count("*").alias("n_common"))
     )
@@ -691,11 +743,9 @@ def contracted_pair_graph(docs: DataFrame, n: int = 3,
                       F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("rep_b"),
                       F.col("n_sh").alias("n_b"))
-    jac = F.col("n_common").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_common"))
     cross = (
         common.join(sa, "rep_a").join(sb, "rep_b")
-        .where(jac >= threshold)
+        .where(_jaccard() >= threshold)
         .select("rep_a", "rep_b", "n_common")
     )
     # surviving-bucket count per multi-member group: every bucket
@@ -1022,18 +1072,8 @@ def winnowing_pairs(docs: DataFrame, min_shared: int = 2) -> DataFrame:
     """Near-dup candidates: documents sharing >= min_shared winnowing
     fingerprints (the MOSS-style detector as a groupBy join)."""
     fp = _slot_cache(winnowing_fingerprints(docs), "winnow_fp")
-    buckets = (
-        fp.groupBy("fp").agg(F.collect_list("doc_id").alias("ds"))
-        .where((F.size("ds") >= 2) & (F.size("ds") <= 200))
-        .select(F.array_sort("ds").alias("ds"))
-    )
-    pair_expr = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> struct(x AS a, y AS b))))"
-    )
     return (
-        buckets.select(F.explode(pair_expr).alias("p"))
-        .groupBy(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
+        _bucket_pairs(fp, ["fp"], 200)
         .agg(F.count("*").alias("shared_fingerprints"))
         .where(F.col("shared_fingerprints") >= min_shared)
         .orderBy("doc_a", "doc_b")
@@ -1252,20 +1292,8 @@ def lsh_band_yield(docs: DataFrame, n: int = 3,
     the cumulative window runs over at most N_BANDS rows."""
     sig = _slot_cache(minhash_signatures(docs, n), "minhash_sig")
     bands = _minhash_bands(sig)
-    buckets = (
-        bands.groupBy("band", "bucket").agg(F.collect_list("doc_id").alias("ds"))
-        .where((F.size("ds") >= 2) & (F.size("ds") <= max_bucket))
-        .select("band", F.array_sort("ds").alias("ds"))
-    )
-    pair_expr = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> struct(x AS a, y AS b))))"
-    )
-    first = (
-        buckets.select("band", F.explode(pair_expr).alias("p"))
-        .groupBy(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
-        .agg(F.min("band").alias("band"))
-    )
+    first = _bucket_pairs(bands, ["band", "bucket"], max_bucket,
+                          carry=("band",)).agg(F.min("band").alias("band"))
     per = first.groupBy("band").agg(F.count("*").alias("n_new_pairs"))
     spine = (
         docs.sparkSession.range(N_BANDS)
@@ -1318,10 +1346,7 @@ def bucket_cap_report(docs: DataFrame, n: int = 3,
     aggregates over the bucket-size table, one shingle-keyed semi-join
     for dropped-doc reach; the one-row frames fold in as broadcast
     scalar crossJoins (the sanctioned class)."""
-    sh = _slot_cache(
-        word_shingles(docs, n)
-        .select("doc_id", F.xxhash64("shingle").alias("shingle")),
-        slot)
+    sh = _hashed_shingles(docs, n, slot)
     bs = sh.groupBy("shingle").agg(F.count("*").alias("s")) \
         .where(F.col("s") >= 2)
     agg = bs.agg(
@@ -1378,10 +1403,7 @@ def bucket_cap_sweep(docs: DataFrame, n: int = 3,
     joins two bounded tables — the corpus-sized work is exactly one
     groupBy(shingle) on the slot-cached hashed-shingle table that the
     pair generators already built."""
-    sh = _slot_cache(
-        word_shingles(docs, n)
-        .select("doc_id", F.xxhash64("shingle").alias("shingle")),
-        "ngram_sh")
+    sh = _hashed_shingles(docs, n, "ngram_sh")
     hist = (
         sh.groupBy("shingle").agg(F.count("*").alias("s"))
         .where(F.col("s") >= 2)
@@ -1450,17 +1472,9 @@ def saturated_pair_sample(docs: DataFrame, n: int = 3,
         .where(F.col("skey") * F.col("s")
                < F.lit(sample * (1 << 28)).cast("long"))
     )
-    buckets = (
-        kept.groupBy("h").agg(F.collect_list("doc_id").alias("ds"))
-        .where((F.size("ds") >= 2) & (F.size("ds") <= 4 * sample))
-        .select(F.array_sort("ds").alias("ds"))
-    )
-    pair_expr = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> struct(x AS a, y AS b))))"
-    )
     return (
-        buckets.select(F.explode(pair_expr).alias("p"))
+        _capped_buckets(kept, ["h"], 4 * sample)
+        .select(F.explode(_pair_expr()).alias("p"))
         # strict guard: if two DISTINCT shingles of one doc hash60-
         # collide into a single bucket, the sorted ds holds that doc
         # twice and positional pairing would emit a self-pair; the
@@ -1495,15 +1509,6 @@ def _saturated_buckets(docs: DataFrame, n: int,
         .where(F.col("s") > max_bucket),
         f"satbk_{n}_{max_bucket}")
     return sh, sat
-
-
-def _sat_pair_expr() -> Column:
-    # built lazily: F.expr needs an active SparkContext, and this module
-    # imports before any session exists
-    return F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> struct(x AS a, y AS b))))"
-    )
 
 
 def recovery_sample_sweep(docs: DataFrame, n: int = 3,
@@ -1552,14 +1557,10 @@ def recovery_sample_sweep(docs: DataFrame, n: int = 3,
         .where(F.col("skey") * F.col("s")
                < F.col("sample").cast("long") * F.lit(1 << 28).cast("long"))
     )
-    per_bucket = (kept.groupBy("sample", "h")
-                  .agg(F.collect_list("doc_id").alias("ds")))
-    buckets_ok = (per_bucket
-                  .where((F.size("ds") >= 2)
-                         & (F.size("ds") <= 4 * F.col("sample")))
-                  .select("sample", F.array_sort("ds").alias("ds")))
+    buckets_ok = _capped_buckets(kept, ["sample", "h"],
+                                 4 * F.col("sample"), carry=("sample",))
     pairs = _slot_cache(
-        buckets_ok.select("sample", F.explode(_sat_pair_expr()).alias("p"))
+        buckets_ok.select("sample", F.explode(_pair_expr()).alias("p"))
         .where(F.col("p.a") < F.col("p.b"))
         .select("sample", F.col("p.a").alias("doc_a"),
                 F.col("p.b").alias("doc_b"))
@@ -1712,15 +1713,12 @@ def recovery_yield_by_size(docs: DataFrame, n: int = 3,
         f"recyield_kept_{n}_{max_bucket}_{sample}")
     agg_rows = kept.groupBy("size_bin").agg(
         F.count("*").alias("n_kept_rows"))
-    buckets_ok = (
-        kept.groupBy("size_bin", "h")
-        .agg(F.collect_list("doc_id").alias("ds"))
-        .where((F.size("ds") >= 2) & (F.size("ds") <= 4 * sample))
-        .select("size_bin", F.array_sort("ds").alias("ds")))
+    buckets_ok = _capped_buckets(kept, ["size_bin", "h"], 4 * sample,
+                                 carry=("size_bin",))
     agg_ok = buckets_ok.groupBy("size_bin").agg(
         F.count("*").alias("n_ok_buckets"))
     agg_pairs = (
-        buckets_ok.select("size_bin", F.explode(_sat_pair_expr()).alias("p"))
+        buckets_ok.select("size_bin", F.explode(_pair_expr()).alias("p"))
         .where(F.col("p.a") < F.col("p.b"))
         .select("size_bin", F.col("p.a").alias("doc_a"),
                 F.col("p.b").alias("doc_b"))
@@ -1768,17 +1766,9 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3,
     `ngram_jaccard_pairs` and standard practice for web-scale LSH."""
     sig = _slot_cache(minhash_signatures(docs, n), "minhash_sig")
     bands = _minhash_bands(sig)
-    buckets = (
-        bands.groupBy("band", "bucket").agg(F.collect_list("doc_id").alias("ds"))
-        .where((F.size("ds") >= 2) & (F.size("ds") <= max_bucket))
-        .select(F.array_sort("ds").alias("ds"))
-    )
-    pair_expr = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> struct(x AS a, y AS b))))"
-    )
     cands = (
-        buckets.select(F.explode(pair_expr).alias("p"))
+        _capped_buckets(bands, ["band", "bucket"], max_bucket)
+        .select(F.explode(_pair_expr()).alias("p"))
         .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
         .distinct()
         .join(sig.select(F.col("doc_id").alias("doc_a"),
@@ -2208,17 +2198,11 @@ def duplicate_clusters(docs: DataFrame, threshold: float = 0.1,
         .where((F.size("ds") >= 2) & (F.size("ds") <= max_bucket))
         .select(F.array_sort("ds").alias("ds")),
         "clusters_buckets")
-    pair_expr = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> struct(x AS a, y AS b))))"
-    )
     common = (
-        buckets.select(F.explode(pair_expr).alias("p"))
+        buckets.select(F.explode(_pair_expr()).alias("p"))
         .groupBy(F.col("p.a").alias("g_a"), F.col("p.b").alias("g_b"))
         .agg(F.count("*").alias("n_common"))
     )
-    jac = F.col("n_common").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_common"))
     # sizes and reps attach in ONE pre-joined map per side instead of
     # four separate joins (r11 cc_breakdown: the pair stream is 23.7M
     # rows at the 100x probe, and each extra equi-join is another full
@@ -2236,7 +2220,7 @@ def duplicate_clusters(docs: DataFrame, threshold: float = 0.1,
         .join(meta.select(F.col("g").alias("g_b"),
                           F.col("rep").alias("doc_b"),
                           F.col("n_sh").alias("n_b")), "g_b")
-        .where(jac >= threshold)
+        .where(_jaccard() >= threshold)
         .select("doc_a", "doc_b")
     )
     cc = connected_components(gpairs)
@@ -2299,17 +2283,9 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 8,
                      .bitwiseAND(F.lit(0x7FFF)).alias("val"))
             for i in range(4)])).alias("bb"),
     ).select("doc_id", "bb.blk", "bb.val")
-    buckets = (
-        blocks.groupBy("blk", "val").agg(F.collect_list("doc_id").alias("ds"))
-        .where((F.size("ds") >= 2) & (F.size("ds") <= max_bucket))
-        .select(F.array_sort("ds").alias("ds"))
-    )
-    pair_expr = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> struct(x AS a, y AS b))))"
-    )
     cands = (
-        buckets.select(F.explode(pair_expr).alias("p"))
+        _capped_buckets(blocks, ["blk", "val"], max_bucket)
+        .select(F.explode(_pair_expr()).alias("p"))
         .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
         .distinct()
         .join(sig.select(F.col("doc_id").alias("doc_a"),

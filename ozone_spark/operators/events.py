@@ -12,7 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from ozone_spark.functions.dedup import bounded_window_key as _bwk
+from ozone_spark.functions.dedup import _pair_expr, bounded_window_key as _bwk
 from pyspark.sql.functions import broadcast
 
 
@@ -682,14 +682,10 @@ def type_cooccurrence(events: DataFrame) -> DataFrame:
     per_type = ut.groupBy("event_type").agg(F.count("*").alias("n"))
     n_users = ut.agg(
         F.countDistinct("user_id").alias("n_users"))
-    pair_expr = F.expr(
-        "flatten(transform(ts, (x, i) -> "
-        "transform(slice(ts, i + 2, size(ts)), y -> struct(x AS a, y AS b))))"
-    )
     pairs = (
         ut.groupBy("user_id")
         .agg(F.array_sort(F.collect_set("event_type")).alias("ts"))
-        .select(F.explode(pair_expr).alias("p"))
+        .select(F.explode(_pair_expr("ts")).alias("p"))
         .groupBy(F.col("p.a").alias("type_a"), F.col("p.b").alias("type_b"))
         .agg(F.count("*").alias("n_both"))
     )

@@ -6,7 +6,11 @@ pushdown, broadcast joins, partial aggregation, top-k)."""
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
+
+log = logging.getLogger(__name__)
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -15,7 +19,9 @@ def formatted_plan(df: DataFrame) -> str:
         jvm = df._sc._jvm  # type: ignore[attr-defined]
         mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         return df._jdf.queryExecution().explainString(mode)  # type: ignore[attr-defined]
-    except Exception:
+    except Exception as e:
+        log.warning("formatted explain through the JVM failed, falling "
+                    "back to DataFrame.explain: %s", e)
         import contextlib
         import io
         buf = io.StringIO()

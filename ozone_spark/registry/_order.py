@@ -242,18 +242,6 @@ def _gate_priority_order(specs: list[QuerySpec],
                 hash_mtime[qname] = art_t
                 last_hash[qname] = rh
     pos = {q.name: i for i, q in enumerate(specs)}
-    # Among never-verified queries, the round-1 registry backlog (queries
-    # that existed when CORRECTNESS_r01 was recorded but fell past the
-    # driver's ~50-row cap) outranks later additions: they have waited
-    # the longest and the round-1 judge explicitly called them out.
-    def tier(name: str) -> int:
-        if name in _R01_GATE_BACKLOG:
-            return 0
-        if name in _R02_GATE_BACKLOG:
-            return 1
-        if name in _R34_GATE_BACKLOG:
-            return 2
-        return 3
 
     def _mtime(path: str) -> float:
         try:
@@ -285,15 +273,14 @@ def _gate_priority_order(specs: list[QuerySpec],
             # rewrite: self-sweeps re-green it (resetting green_mtime
             # AND the recorded spec_hash), so the generic stale()
             # signal goes blind — pin it just behind the never-gated
-            # tiers until a driver round >= `need` records a
+            # queries until a CORRECTNESS_r{need}+ artifact records a
             # post-rewrite row (VERDICT r8 item 2)
-            return (-1, 3.5, pos[q.name])
+            return (-1, 1, pos[q.name])
         if g >= 0 and stale(q):
             # edited since its green row: re-verify ahead of everything
-            # except genuinely never-gated queries (tier 4 > backlog
-            # tiers 0-3, so never-gated still lead)
-            return (-1, 4, pos[q.name])
-        return (g, tier(q.name), pos[q.name])
+            # except never-gated queries and rewrite pins
+            return (-1, 2, pos[q.name])
+        return (g, 0, pos[q.name])
 
     return sorted(specs, key=key)
 
@@ -333,60 +320,6 @@ _REWRITE_PENDING: dict[str, int] = {
     # NULL-user session filter (inert on fixtures, plan adds a filter):
     "session_concurrency": 12,
 }
-
-
-# Registered in round 1 but never gate-verified (VERDICT.md round 1,
-# "Close the driver gate"): keep first in line until each has a green
-# CORRECTNESS row, ahead of anything added in later rounds.
-_R01_GATE_BACKLOG = frozenset({
-    "dedup_minhash_lsh", "dedup_simhash", "dedup_winnowing",
-    "knn_bruteforce", "knn_lsh", "knn_ivf",
-    "embedding_near_dup", "embedding_norms",
-    "media_summary", "media_features", "media_frame_sample", "media_resize",
-    "fso_list_status", "fso_dir_delete_expansion", "fso_resolve_subtree",
-    "rename_subtree", "range_read_plan", "multipart_etag",
-    "topology_sorted_replicas", "longest_prefix_acl", "ec_read_plan",
-    "unique_snapshot_objects", "list_volumes", "list_snapshots",
-    "conditional_rewrite", "replica_bcsid_lag", "balancer_move_candidates",
-    "snapshot_move_deleted_keys", "tenant_access_report",
-    "cdc_incremental_histogram", "cdc_incremental_container_index",
-    "streaming_tumbling_daily", "streaming_sessionize",
-})
-
-
-# Registered in round 2 but never gate-verified (VERDICT.md round 2 item
-# 2: "freeze new query additions until r3's gate has drained the queue"):
-# these outrank anything added in round 3+, so new registrations cannot
-# starve the backlog out of the driver's ~50-row per-round cap.
-_R02_GATE_BACKLOG = frozenset({
-    "snapshot_renamed_entries", "snapshot_chain_info",
-    "snapshot_diff_renamed_table", "size_percentiles", "namespace_dist",
-    "lifecycle_tagged_expired", "lifecycle_mpu_aborts",
-    "trash_expired_checkpoints", "trash_checkpoint_plan",
-    "lease_recovery_plan", "document_chunks", "gopher_quality",
-    "decontaminate_overlap", "repetition_metrics", "stratified_sample",
-    "stratified_sample_summary", "pack_sequences", "dedup_keep_best",
-    "domain_mixture", "duplicated_spans", "training_shards",
-    "cross_corpus_dedup", "dedup_clusters", "ec_reconstruction_plan",
-    "cdc_incremental_namespace_dist", "streaming_session_stats",
-    "streaming_dedup", "skewed_event_totals", "acl_effective_rights",
-    "acl_read_allowed", "cluster_growth_daily", "sst_diff_pruning",
-    "dtoken_expiry", "list_pipelines", "safemode_status",
-    "decommission_plan",
-})
-
-
-# Registered in rounds 3/4 but never driver-gated (VERDICT.md round 4
-# item 1: "drain the last 15-query driver-gate queue — change nothing
-# about their order"): these outrank any round-5+ addition until each
-# has a green CORRECTNESS row.
-_R34_GATE_BACKLOG = frozenset({
-    "node_status", "blocks_pending_deletion", "key_insight_summary",
-    "storage_distribution", "pending_deleted_dirs", "deleted_dirs_summary",
-    "dedup_threshold_sweep", "paragraph_dedup", "semantic_dedup",
-    "lookup_key", "streaming_dedup_bounded", "remove_duplicate_spans",
-    "payload_chunk_near_dup", "perplexity_buckets", "streaming_attribution",
-})
 
 
 # Queries with no DuckDB oracle (driver runs the weaker rows-only

@@ -119,7 +119,7 @@ def test_rewrite_pin_overrides_self_sweep_blindness(tmp_path):
         {target: green}))
     order = [q.name for q in registry._gate_priority_order(
         registry._REGISTRY_ORDER, artifacts_root=str(tmp_path))]
-    # pinned sorts behind never-gated tiers (in this synthetic world
+    # pinned sorts behind never-gated queries (in this synthetic world
     # that is every OTHER query) but ahead of the green-band control
     assert order.index(target) < order.index("file_size_histogram")
     # a driver round >= the pin clears it back to the green band

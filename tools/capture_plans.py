@@ -1,11 +1,22 @@
 """Dump .explain('formatted') for every bench-board query into
 plans/$SPARK_GRAFT_PLANS_ROUND/<query>_<tag>.txt (default r12) — the
-optimization round's before/after plan
-evidence (the judge reads these files instead of running Spark).
+before/after plan evidence for a change, readable without running
+Spark.
 
 Usage: python tools/capture_plans.py <tag> [query ...]
   tag    = 'before' | 'after' (file suffix)
   query  = optional subset; default is the whole bench board.
+
+The plan text is written NORMALIZED (see `normalize`): expression ids,
+lambda-variable ids, exchange plan ids and temp / checkpoint /
+warehouse paths are replaced by fixed placeholders, and the header
+carries neither the tag nor the capture time (those go to stderr).
+Captures of the same query from two checkouts therefore compare with
+plain `diff`:
+
+  python tools/capture_plans.py before q1 q2   # on the old checkout
+  python tools/capture_plans.py after q1 q2    # on the new checkout
+  diff plans/<round>/q1_before.txt plans/<round>/q1_after.txt
 
 Drain-style queries (streaming_* wrappers that run a stream to
 completion inside the builder function) still return a DataFrame, so
@@ -15,7 +26,9 @@ read-back, which is labeled as such in the file header.
 from __future__ import annotations
 
 import os
+import re
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -26,6 +39,39 @@ from ozone_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r12"))
+
+
+def _path_roots() -> list[str]:
+    """Directories whose paths differ run to run: the temp dir (streaming
+    checkpoints, staged sources), Spark's local dirs and the warehouse."""
+    roots = {tempfile.gettempdir(), "/tmp"}
+    roots.update(p for p in os.environ.get("SPARK_LOCAL_DIRS", "").split(",")
+                 if p)
+    return sorted((r.rstrip("/") for r in roots), key=len, reverse=True)
+
+
+# Order matters: paths first (a temp path may contain digits and '#'),
+# then the run-specific ids.
+_ID_RULES = [
+    (re.compile(r"#\d+L?"), "#N"),
+    # Python-side lambdas get globally counted names (x_12); SQL lambdas
+    # keep their written name and only carry the #id handled above
+    (re.compile(r"\blambda (\w+?)_\d+\b"), r"lambda \1_N"),
+    (re.compile(r"\bplan_id=\d+"), "plan_id=N"),
+]
+
+
+def normalize(plan: str) -> str:
+    """Replace every run-specific token of a formatted plan with a fixed
+    placeholder, so two captures of the same plan are byte-identical."""
+    for root in _path_roots():
+        plan = re.sub(r"(file:)?" + re.escape(root) + r"/[^\s,\]\)]*",
+                      "<tmp>", plan)
+    plan = re.sub(r"(file:)?/[^\s,\]\)]*spark-warehouse[^\s,\]\)]*",
+                  "<warehouse>", plan)
+    for pat, rep in _ID_RULES:
+        plan = pat.sub(rep, plan)
+    return plan
 
 
 def main() -> int:
@@ -49,9 +95,8 @@ def main() -> int:
         dt = time.perf_counter() - t0
         path = os.path.join(OUT, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
-            fh.write(f"-- {name} ({tag}) sf_dir={SF_DIR} "
-                     f"capture_wall={dt:.2f}s\n")
-            fh.write(plan.rstrip() + "\n")
+            fh.write(f"-- {name} sf_dir={SF_DIR}\n")
+            fh.write(normalize(plan).rstrip() + "\n")
         print(f"# {name}: {path} ({dt:.2f}s)", file=sys.stderr)
     spark.stop()
     return 0

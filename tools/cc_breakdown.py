@@ -97,12 +97,8 @@ def main() -> int:
         .select(F.array_sort("ds").alias("ds")),
         "clusters_buckets")
     clock("buckets(from stream)", lambda: buckets.count())
-    pair_expr = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> struct(x AS a, y AS b))))"
-    )
     common = (
-        buckets.select(F.explode(pair_expr).alias("p"))
+        buckets.select(F.explode(D._pair_expr()).alias("p"))
         .groupBy(F.col("p.a").alias("g_a"), F.col("p.b").alias("g_b"))
         .agg(F.count("*").alias("n_common"))
     )
