@@ -26,8 +26,10 @@ from ozone_spark.session import apply_runtime_confs
 
 
 class OzoneSparkNamespace:
-    """Handle over the loaded namespace tables; every method is a thin
-    delegation to the operator library (citations live there)."""
+    """Handle over the namespace tables; every method is a thin
+    delegation to the operator library (citations live there).  The
+    tables are read and derived on first use, so construction runs no
+    Spark job."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = apply_runtime_confs(spark)
@@ -113,7 +115,7 @@ class OzoneSparkNamespace:
         """Run SQL over the namespace: every table/view is registered as
         a temp view (keys, locations, containers, replicas, datanodes,
         directories, snap1, snap2, open_keys, deleted_keys + the driver
-        tables)."""
+        tables), building the ones no earlier call has touched."""
         for name, df in self.t.items():
             df.createOrReplaceTempView(name)
         return self.spark.sql(query)

@@ -16,6 +16,8 @@ engine (the DuckDB oracle inlines the same literals).
 
 from __future__ import annotations
 
+import math
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.functions import broadcast
@@ -90,6 +92,16 @@ def plane_coeffs(n_planes: int = N_PLANES, dim: int = DIM) -> list[list[float]]:
     return out
 
 
+def _coeff_literal(c: float, plane: int, index: int) -> str:
+    """Shortest round-trip text of one plane coefficient; NaN and the
+    infinities have no SQL numeric literal, so they are rejected."""
+    x = float(c)
+    if not math.isfinite(x):
+        raise ValueError(f"plane {plane} coefficient {index} is {x!r}; "
+                         "hyperplane coefficients must be finite")
+    return repr(x)
+
+
 def _sig_sql_from_planes(vec_sql: str, planes: list[list[float]]) -> str:
     """Spark-SQL string for the hyperplane signature over an explicit
     plane list — the same fused per-row expression the Column-builder
@@ -102,11 +114,12 @@ def _sig_sql_from_planes(vec_sql: str, planes: list[list[float]]) -> str:
     the equivalent ~15 KB string in milliseconds."""
     bits = []
     for p, row in enumerate(planes):
-        # repr(c) keeps the SQL faithful to ARBITRARY coefficients
-        # (ADVICE r11: the previous ±1-hardcoded rendering would have
-        # silently mis-signed any future non-unit plane); for the
-        # shipped ±1 planes repr emits the byte-identical "1.0D"/"-1.0D"
-        coeff = "array(" + ",".join(f"{c!r}D" for c in row) + ")"
+        # repr(float(c)) keeps the SQL faithful to ARBITRARY finite
+        # coefficients, numpy scalars included (their own repr is not a
+        # SQL literal); for the shipped ±1 planes it emits the
+        # byte-identical "1.0D"/"-1.0D"
+        coeff = "array(" + ",".join(
+            f"{_coeff_literal(c, p, i)}D" for i, c in enumerate(row)) + ")"
         proj = (f"aggregate(zip_with({vec_sql}, {coeff}, "
                 f"(x, c) -> CAST(x AS DOUBLE) * c), "
                 f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")

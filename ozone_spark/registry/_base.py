@@ -41,25 +41,31 @@ from ozone_spark.oracle import _CTES as ORACLE_CTES, with_views
 
 NOW_MS = tables.NOW_MS
 
-# view cache keyed by (id(spark), sf_dir) so a test loop doesn't rebuild
-_view_cache: dict[tuple[int, str], dict[str, DataFrame]] = {}
+# the derived namespace views are this engine's base tables — keep the
+# hot ones resident (they are small relative to the raw fact tables; at
+# real scale these are the laid-out parquet tables of ozone_spark.layout
+# instead).  They are persisted together, in this order, on a session's
+# first views() call, so every later query sees the same CacheManager
+# state whichever views it touches; the rest are built when first asked.
+RESIDENT_VIEWS = ("keys", "locations", "containers", "replicas",
+                  "datanodes", "directories", "snap1", "snap2",
+                  "open_keys", "deleted_keys", "acl_entries",
+                  "documents", "embeddings", "events")
+
+# the view maps live on the session object, keyed by sf_dir: they are
+# released with the session (their DataFrames reference it, so a weak
+# session-keyed dict would pin it) and a recycled id() cannot alias them
+_VIEWS_ATTR = "_ozone_spark_views"
 
 
-def views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    key = (id(spark), sf_dir)
-    if key not in _view_cache:
+def views(spark: SparkSession, sf_dir: str) -> tables.NamespaceViews:
+    per_session = vars(spark).setdefault(_VIEWS_ATTR, {})
+    if sf_dir not in per_session:
         v = tables.namespace_views(spark, sf_dir)
-        # the derived namespace views are this engine's base tables —
-        # keep the hot ones resident (they are small relative to the
-        # raw fact tables; at real scale these are the laid-out parquet
-        # tables of ozone_spark.layout instead)
-        for name in ("keys", "locations", "containers", "replicas",
-                     "datanodes", "directories", "snap1", "snap2",
-                     "open_keys", "deleted_keys", "acl_entries",
-                     "documents", "embeddings", "events"):
-            v[name] = v[name].persist()
-        _view_cache[key] = v
-    return _view_cache[key]
+        for name in RESIDENT_VIEWS:
+            v[name].persist()
+        per_session[sf_dir] = v
+    return per_session[sf_dir]
 
 
 @dataclass(frozen=True)

@@ -10,7 +10,9 @@ from __future__ import annotations
 
 import logging
 import os
+import weakref
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 log = logging.getLogger(__name__)
@@ -61,15 +63,17 @@ def runtime_confs() -> dict[str, str]:
             for k, v in RUNTIME_CONFS.items()}
 
 
-_shipped_contexts: set[int] = set()
+# contexts the package has been shipped to, held weakly: a context
+# built after another is stopped is a new member even when it reuses
+# the collected one's id()
+_shipped_contexts: weakref.WeakSet[SparkContext] = weakref.WeakSet()
 
 
 def _ship_package(spark: SparkSession) -> None:
     """Make ozone_spark importable on executor Python workers (needed by
     pandas-UDF paths when the driver process runs from another cwd)."""
     sc = spark.sparkContext
-    key = id(sc)
-    if key in _shipped_contexts:
+    if sc in _shipped_contexts:
         return
     try:
         import shutil
@@ -84,7 +88,7 @@ def _ship_package(spark: SparkSession) -> None:
     except Exception:
         log.warning("could not ship ozone_spark to executors; UDF-free "
                     "queries work, pandas-UDF ones may not", exc_info=True)
-    _shipped_contexts.add(key)
+    _shipped_contexts.add(sc)
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:

@@ -9,6 +9,10 @@ SQL-expressible transforms, so every namespace operator can be checked
 against the DuckDB oracle (ozone_spark/oracle.py holds the equivalent
 CTE text — keep the two in lockstep).
 
+`namespace_views` returns a lazy name -> DataFrame map: no table is
+read and no view derived until it is first accessed, and each is then
+memoized, so a request pays only for the views it touches.
+
 Derivation map (all arithmetic chosen to be bit-exact in both engines):
 
   keys        <- orders    (one key per order; db_key sorted-lexicographic,
@@ -31,6 +35,8 @@ dataSize/replication/creationTime/owner), OMDBDefinition.java:209-273.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Iterator, Mapping
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -65,10 +71,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # the instant; unix_millis/window/watermark all require TIMESTAMP.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in DRIVER_TABLES}
 
 
 # ---------------------------------------------------------------------------
@@ -589,32 +591,75 @@ def pipelines_view(spark: SparkSession) -> DataFrame:
     return three.unionByName(one)
 
 
-def namespace_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All driver tables + derived namespace views, by name."""
-    t = load_all(spark, sf_dir)
-    keys = keys_view(t["orders"])
-    t.update(
-        keys=keys,
-        directories=directories_view(keys),
-        locations=locations_view(t["lineitem"]),
-        containers=containers_view(spark),
-        replicas=replicas_view(spark),
-        datanodes=datanodes_view(spark),
-        snap1=snap1_view(keys),
-        snap2=snap2_view(keys),
-        snap3=snap3_view(keys),
-        snapshot_chain=snapshot_chain_view(spark),
-        open_keys=open_keys_view(keys),
-        deleted_keys=deleted_keys_view(keys),
-        multipart_uploads=multipart_uploads_view(keys),
-        user_volumes=user_volumes_view(keys),
-        trash_entries=trash_entries_view(keys),
-        acl_entries=acl_entries_view(spark),
-        tenant_access=tenant_access_view(t["customer"]),
-        sst_catalog=sst_catalog_view(spark),
-        compaction_edges=compaction_edges_view(spark),
-        sst_snapshot_files=sst_snapshot_files_view(spark),
-        pipelines=pipelines_view(spark),
-        delegation_tokens=delegation_tokens_view(spark),
-    )
-    return t
+# derived view -> (builder, source view); a None source means the
+# builder takes the session itself.  Sources are entries of the same
+# map, so a base view is derived once however many views read it.
+_DERIVED: dict[str, tuple[Callable[..., DataFrame], str | None]] = {
+    "keys": (keys_view, "orders"),
+    "directories": (directories_view, "keys"),
+    "locations": (locations_view, "lineitem"),
+    "containers": (containers_view, None),
+    "replicas": (replicas_view, None),
+    "datanodes": (datanodes_view, None),
+    "snap1": (snap1_view, "keys"),
+    "snap2": (snap2_view, "keys"),
+    "snap3": (snap3_view, "keys"),
+    "snapshot_chain": (snapshot_chain_view, None),
+    "open_keys": (open_keys_view, "keys"),
+    "deleted_keys": (deleted_keys_view, "keys"),
+    "multipart_uploads": (multipart_uploads_view, "keys"),
+    "user_volumes": (user_volumes_view, "keys"),
+    "trash_entries": (trash_entries_view, "keys"),
+    "acl_entries": (acl_entries_view, None),
+    "tenant_access": (tenant_access_view, "customer"),
+    "sst_catalog": (sst_catalog_view, None),
+    "compaction_edges": (compaction_edges_view, None),
+    "sst_snapshot_files": (sst_snapshot_files_view, None),
+    "pipelines": (pipelines_view, None),
+    "delegation_tokens": (delegation_tokens_view, None),
+}
+
+VIEW_NAMES: tuple[str, ...] = (*DRIVER_TABLES, *_DERIVED)
+
+
+class NamespaceViews(Mapping[str, DataFrame]):
+    """The driver tables and derived namespace views of one session and
+    data dir, by name.  An entry is built on first access and then
+    memoized.  `in`, `len`, iteration and `keys()` build nothing;
+    `values()` and `items()` build each entry as they reach it."""
+
+    def __init__(self, spark: SparkSession, sf_dir: str):
+        self.spark = spark
+        self.sf_dir = sf_dir
+        self._built: dict[str, DataFrame] = {}
+
+    def __getitem__(self, name: str) -> DataFrame:
+        if name not in self._built:
+            if name in _DERIVED:
+                build, src = _DERIVED[name]
+                df = build(self.spark if src is None else self[src])
+            elif name in DRIVER_TABLES:
+                df = load_table(self.spark, self.sf_dir, name)
+            else:
+                raise KeyError(name)
+            self._built[name] = df
+        return self._built[name]
+
+    def __contains__(self, name: object) -> bool:
+        return name in VIEW_NAMES
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(VIEW_NAMES)
+
+    def __len__(self) -> int:
+        return len(VIEW_NAMES)
+
+    def built(self) -> tuple[str, ...]:
+        """Names of the entries built so far, in build order."""
+        return tuple(self._built)
+
+
+def namespace_views(spark: SparkSession, sf_dir: str) -> NamespaceViews:
+    """All driver tables + derived namespace views, by name; each is
+    read or derived on first access (see NamespaceViews)."""
+    return NamespaceViews(spark, sf_dir)

@@ -3,12 +3,16 @@ plans/$SPARK_GRAFT_PLANS_ROUND/<query>_<tag>.txt (default r12) — the
 before/after plan evidence for a change, readable without running
 Spark.
 
-Usage: python tools/capture_plans.py <tag> [query ...]
+Usage: python tools/capture_plans.py <tag> [--all | query ...]
   tag    = 'before' | 'after' (file suffix)
+  --all  = every registered query, in registration order
+           (`_REGISTRY_ORDER`; the gate order of `queries()` moves
+           with source edits, and the cached-relation state a plan
+           sees depends on what ran before it)
   query  = optional subset; default is the whole bench board.
 
 The plan text is written NORMALIZED (see `normalize`): expression ids,
-lambda-variable ids, exchange plan ids and temp / checkpoint /
+lambda-variable ids, exchange plan ids, RDD ids and temp / checkpoint /
 warehouse paths are replaced by fixed placeholders, and the header
 carries neither the tag nor the capture time (those go to stderr).
 Captures of the same query from two checkouts therefore compare with
@@ -17,6 +21,9 @@ plain `diff`:
   python tools/capture_plans.py before q1 q2   # on the old checkout
   python tools/capture_plans.py after q1 q2    # on the new checkout
   diff plans/<round>/q1_before.txt plans/<round>/q1_after.txt
+
+A whole-registry identity check is one `--all` capture per checkout
+(same tag, same round dir name) and `diff -r` of the two plan dirs.
 
 Drain-style queries (streaming_* wrappers that run a stream to
 completion inside the builder function) still return a DataFrame, so
@@ -33,7 +40,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ozone_spark.registry import bench_queries, queries  # noqa: E402
+from ozone_spark import registry  # noqa: E402
 from ozone_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -58,6 +65,10 @@ _ID_RULES = [
     # keep their written name and only carry the #id handled above
     (re.compile(r"\blambda (\w+?)_\d+\b"), r"lambda \1_N"),
     (re.compile(r"\bplan_id=\d+"), "plan_id=N"),
+    # RDD ids count every RDD the context has made so far, so they
+    # shift with what ran before (e.g. a createDataFrame scan); the
+    # call site after the creating method is the caller's stack frame
+    (re.compile(r"\b(\w*RDD)\[\d+\]( at \w+)?( at \S+:\d+)?"), r"\1[N]\2"),
 ]
 
 
@@ -79,11 +90,15 @@ def main() -> int:
     names = sys.argv[2:]
     os.makedirs(OUT, exist_ok=True)
     spark = get_spark("ozone-spark-plan-capture")
-    board = bench_queries()
     # named queries may come from the FULL registry (r12: plans are
     # also captured for touched off-board queries like dup_graph_centrality)
-    full = queries()
-    todo = {n: full[n] for n in names} if names else board
+    full = {q.name: q.fn for q in registry._REGISTRY_ORDER}
+    if names == ["--all"]:
+        todo = full
+    elif names:
+        todo = {n: full[n] for n in names}
+    else:
+        todo = registry.bench_queries()
     for name, fn in todo.items():
         t0 = time.perf_counter()
         try:
