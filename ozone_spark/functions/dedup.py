@@ -37,10 +37,12 @@ operator is value-checked against SQL, not just row-counted.
 from __future__ import annotations
 
 import logging
-import weakref
+from dataclasses import dataclass
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, GroupedData, Window
+from pyspark.sql import Column, DataFrame, GroupedData, SparkSession, Window
+
+from ozone_spark import session
 
 log = logging.getLogger(__name__)
 
@@ -100,9 +102,6 @@ def bounded_window_key(col: str) -> Column:
     return F.pmod(F.xxhash64(F.col(col)), F.lit(1))
 
 
-_NPARTS_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
 def _spread(df: DataFrame) -> DataFrame:
     """Small single-file inputs arrive as one partition; fan out before
     CPU-heavy per-row transforms so all cores work.  (At real scale the
@@ -119,7 +118,7 @@ def _spread(df: DataFrame) -> DataFrame:
     memoized per (session, semanticHash, target) — semanticHash needs
     only analysis (~0.5 ms) and is stable across rebuilds of the same
     plan.  The memo stores a partition COUNT, never data or results, and
-    lives only for the session (WeakKeyDictionary).
+    lives in the session's state (`session.state`), released with it.
 
     Key caveat (ADVICE r11): the file-split confs
     (spark.sql.files.maxPartitionBytes / openCostInBytes) are NOT part
@@ -131,20 +130,17 @@ def _spread(df: DataFrame) -> DataFrame:
     sets them once), so the narrow key is the measured win."""
     sess = df.sparkSession
     target = sess.sparkContext.defaultParallelism
-    n = None
-    memo = None
-    key = None
+    memo = session.state(sess).setdefault("nparts", {})
     try:
-        memo = _NPARTS_MEMO.setdefault(sess, {})
         key = (df.semanticHash(), target)
-        n = memo.get(key)
     except Exception as e:
         log.warning("partition-count memo unavailable, probing the plan "
                     "directly: %s", e)
-        memo = None
+        key = None
+    n = memo.get(key)
     if n is None:
         n = df.rdd.getNumPartitions()
-        if memo is not None and len(memo) < 1024:
+        if key is not None and len(memo) < 1024:
             memo[key] = n
     return df if n >= target else df.repartition(target)
 
@@ -162,22 +158,30 @@ def _norm_text(text: Column) -> Column:
 # (the ADVICE-r4 fix for payload_chunk_near_dup, applied module-wide:
 # a 12-query session over a 10x corpus otherwise accumulates gigabytes
 # of dead shingle caches whose eviction pressure bleeds into later
-# queries' timings).
-_CACHE_SLOTS: dict[str, DataFrame] = {}
+# queries' timings).  Slots are per session: `session.state(spark)
+# ["slots"]` maps a slot name to its frame and its hit and miss
+# counters (ADVICE r11), so a silent always-miss regression (e.g.
+# sameSemantics keys diverging run-to-run on a closure-embedding plan)
+# is visible.  The counters outlive a release of the frame.
+@dataclass
+class _Slot:
+    frame: DataFrame | None = None
+    hits: int = 0
+    misses: int = 0
 
-# Observability (ADVICE r11): slot hit/miss/evict counters, so a silent
-# always-miss regression (e.g. sameSemantics keys diverging run-to-run
-# on a closure-embedding plan) is visible instead of silently restoring
-# the per-call rebuild cost the cache exists to remove.  Counters only —
-# never data; read via slot_stats(), reset at will by tests.
-_SLOT_STATS: dict[str, list[int]] = {}  # slot -> [hits, misses]
+
+def _slots(spark: SparkSession | None) -> dict[str, _Slot]:
+    return {} if spark is None else \
+        session.state(spark).setdefault("slots", {})
 
 
 def slot_stats(slot: str | None = None) -> dict[str, tuple[int, int]]:
-    """(hits, misses) per cache slot — misses include first-touch."""
-    items = _SLOT_STATS.items() if slot is None else \
-        [(slot, _SLOT_STATS.get(slot, [0, 0]))]
-    return {s: (c[0], c[1]) for s, c in items}
+    """(hits, misses) per cache slot of the active session — misses
+    include first-touch."""
+    slots = _slots(SparkSession.getActiveSession())
+    items = slots.items() if slot is None else \
+        [(slot, slots.get(slot, _Slot()))]
+    return {s: (c.hits, c.misses) for s, c in items}
 
 
 def _slot_cache(df: DataFrame, slot: str) -> DataFrame:
@@ -190,8 +194,9 @@ def _slot_cache(df: DataFrame, slot: str) -> DataFrame:
     and recall) hit one persisted copy instead of each rebuilding and
     re-persisting it — the r5 bench measured that rebuild as a +20%
     regression on dedup_minhash_lsh once the new consumers joined.  A
-    different plan (new input, new session) still evicts the previous
-    frame, so resident cache stays bounded at one table per slot.
+    different plan (new input) still evicts the previous frame, so
+    resident cache stays bounded at one table per slot per session
+    (the slot is looked up in `df.sparkSession`'s state).
 
     Staleness hazard (ADVICE r6): sameSemantics compares ANALYZED PLANS,
     not data — if a source file is overwritten IN PLACE mid-session, a
@@ -201,84 +206,81 @@ def _slot_cache(df: DataFrame, slot: str) -> DataFrame:
     immutable; sessions with mutable inputs should key the slot on a
     data fingerprint (e.g. max(mtime) of input files) or unpersist
     between loads."""
-    stats = _SLOT_STATS.setdefault(slot, [0, 0])
-    old = _CACHE_SLOTS.get(slot)
+    entry = _slots(df.sparkSession).setdefault(slot, _Slot())
+    old = entry.frame
+    if old is not None and _same_plan(df, old, slot):
+        entry.hits += 1
+        # External-uncache hazard (ADVICE r10 medium): Spark's
+        # CacheManager is PLAN-keyed, so two slots holding sameSemantics
+        # twins share ONE cache entry — an unpersist on either frame
+        # (release_slots on the twin's slot, or a caller's own) silently
+        # de-caches the survivor too.  Re-persist on hit when the matched
+        # frame's storage level dropped to NONE; without this the r10
+        # armed scale probe measured its "warm" ngram_sh queries cold AND
+        # recomputing the shingle stage per consumer (SCALE100_r10 armed
+        # 128.9s vs 27.0s armless at identical rows).
+        sl = old.storageLevel
+        if not (sl.useMemory or sl.useDisk or sl.useOffHeap):
+            old.persist()
+        return old
     if old is not None:
-        try:
-            if df.sameSemantics(old):
-                stats[0] += 1
-                # External-uncache hazard (ADVICE r10 medium): Spark's
-                # CacheManager is PLAN-keyed, so two slots holding
-                # sameSemantics twins share ONE cache entry — an
-                # unpersist on either frame (release_slots on the twin's
-                # slot, or a caller's own) silently de-caches the
-                # survivor too.  Re-persist on hit when the matched
-                # frame's storage level dropped to NONE; without this
-                # the r10 armed scale probe measured its "warm" ngram_sh
-                # queries cold AND recomputing the shingle stage per
-                # consumer (SCALE100_r10 armed 128.9s vs 27.0s armless
-                # at identical rows).
-                sl = old.storageLevel
-                if not (sl.useMemory or sl.useDisk or sl.useOffHeap):
-                    old.persist()
-                return old
-        except Exception as e:
-            # e.g. old frame's session is gone — fall through
-            log.warning("cache slot %r: plan comparison failed, evicting "
-                        "and re-persisting: %s", slot, e)
-        _CACHE_SLOTS.pop(slot, None)
-        try:
-            old.unpersist()
-        except Exception as e:
-            # dead session — the frame is already gone
-            log.warning("cache slot %r: unpersist of the evicted frame "
-                        "failed: %s", slot, e)
-    stats[1] += 1
+        _unpersist(old, slot)
+    entry.misses += 1
     df.persist()
-    _CACHE_SLOTS[slot] = df
+    entry.frame = df
     return df
 
 
+def _same_plan(a: DataFrame, b: DataFrame, slot: str) -> bool:
+    """a.sameSemantics(b); False, logged, when the comparison fails
+    (e.g. on a frame whose session is gone)."""
+    try:
+        return a.sameSemantics(b)
+    except Exception as e:
+        log.warning("cache slot %r: plan comparison failed: %s", slot, e)
+        return False
+
+
+def _unpersist(df: DataFrame, slot: str) -> None:
+    """Unpersist a slot's frame; a failure (ADVICE r10 low #1: a dead
+    session's frame) is logged and aborts none of the caller's other
+    releases."""
+    try:
+        df.unpersist()
+    except Exception as e:
+        log.warning("cache slot %r: unpersist failed: %s", slot, e)
+
+
 def release_slots(*prefixes: str) -> list:
-    """Unpersist and forget every cache slot whose name starts with one
-    of `prefixes` (all slots if none given).  For harnesses that run a
-    cache-hungry pass before timed work and must return ONLY that
-    pass's tables to cold — a blanket catalog.clearCache() also evicts
-    slots the timed queries legitimately share (the scale probe's
-    stage-rows pass warms ngram_sh exactly like a resident production
-    index would), changing what the timings measure."""
-    hit = [s for s in _CACHE_SLOTS
-           if not prefixes or any(s.startswith(p) for p in prefixes)]
-    kept = [f for s, f in _CACHE_SLOTS.items() if s not in set(hit)]
+    """Unpersist and forget every cache slot of the active session whose
+    name starts with one of `prefixes` (all its slots if none given).
+    For harnesses that run a cache-hungry pass before timed work and
+    must return ONLY that pass's tables to cold — a blanket
+    catalog.clearCache() also evicts slots the timed queries
+    legitimately share (the scale probe's stage-rows pass warms ngram_sh
+    exactly like a resident production index would), changing what the
+    timings measure."""
+    spark = SparkSession.getActiveSession()
+    mine = _slots(spark)
+    hit = [s for s, c in mine.items() if c.frame is not None
+           and (not prefixes or any(s.startswith(p) for p in prefixes))]
+    frames = [mine[s].frame for s in hit]
     for s in hit:
-        f = _CACHE_SLOTS.pop(s)
+        mine[s].frame = None
+    # every live session of the context shares its CacheManager
+    kept = [] if spark is None else [
+        c.frame for st in session.states(spark.sparkContext)
+        for c in st.get("slots", {}).values() if c.frame is not None]
+    for s, f in zip(hit, frames):
         # Plan-keyed twin guard (ADVICE r10 medium): if a RETAINED slot
-        # holds a sameSemantics twin, both frames map to the same
-        # CacheManager entry and unpersisting the released one would
-        # de-cache the survivor (the r10 armed probe's 'probe_rec'
+        # of any session holds a sameSemantics twin, both frames map to
+        # the same CacheManager entry and unpersisting the released one
+        # would de-cache the survivor (the r10 armed probe's 'probe_rec'
         # release did exactly this to 'ngram_sh', turning the warm-
         # regime measurements cold).  Skip the unpersist — the entry
         # stays owned by the surviving slot.
-        twin = False
-        for k in kept:
-            try:
-                if f.sameSemantics(k):
-                    twin = True
-                    break
-            except Exception as e:
-                # a dead kept frame can't be anyone's twin
-                log.warning("release of cache slot %r: plan comparison "
-                            "with a kept slot failed: %s", s, e)
-                continue
-        if twin:
-            continue
-        try:
-            f.unpersist()
-        except Exception as e:
-            # dead session frame (ADVICE r10 low #1): one broken
-            # unpersist must not abort the release of the rest
-            log.warning("release of cache slot %r: unpersist failed: %s",
-                        s, e)
+        if not any(_same_plan(f, k, s) for k in kept):
+            _unpersist(f, s)
     return hit
 
 

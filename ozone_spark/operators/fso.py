@@ -20,6 +20,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ozone_spark import session
+
 
 def _file_parent(db_key=None):
     return F.regexp_replace(db_key if db_key is not None else F.col("db_key"),
@@ -43,13 +45,6 @@ def list_status(directories: DataFrame, keys: DataFrame, parent: str,
     return dirs.unionByName(files).orderBy("name").limit(max_entries)
 
 
-# frontier frames persisted by the most recent BFS invocation: every
-# level's frame is part of the result's lineage, so none can be
-# unpersisted until the NEXT call (same one-slot eviction policy as the
-# dedup signature caches)
-_BFS_CACHE: list[DataFrame] = []
-
-
 def directory_delete_expansion(directories: DataFrame, keys: DataFrame,
                                root_path: str,
                                max_depth: int = 64) -> DataFrame:
@@ -61,10 +56,14 @@ def directory_delete_expansion(directories: DataFrame, keys: DataFrame,
     broadcast-able join of the frontier against the dir table — at scale
     this is the GraphFrames-style BFS; the reference re-queues batches
     through deletedDirectoryTable the same way."""
-    while _BFS_CACHE:
-        _BFS_CACHE.pop().unpersist()
-    frontier = directories.sparkSession.createDataFrame(
-        [(root_path,)], "path string")
+    # frontier frames persisted by the session's previous call: each is
+    # in that result's lineage, so none is unpersisted before this call
+    # (the one-slot eviction policy of the dedup signature caches)
+    spark = directories.sparkSession
+    held = session.state(spark).setdefault("bfs", [])
+    while held:
+        held.pop().unpersist()
+    frontier = spark.createDataFrame([(root_path,)], "path string")
     all_dirs = frontier
     # max_depth is a safety bound only — the loop exits on an empty
     # frontier; if the bound is hit with work remaining we FAIL (a
@@ -77,7 +76,7 @@ def directory_delete_expansion(directories: DataFrame, keys: DataFrame,
             .select("path")
         )
         new = children.join(all_dirs, "path", "left_anti").persist()
-        _BFS_CACHE.append(new)
+        held.append(new)
         if new.isEmpty():
             break
         all_dirs = all_dirs.unionByName(new)

@@ -28,8 +28,3 @@ def formatted_plan(df: DataFrame) -> str:
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         return buf.getvalue()
-
-
-def plan_has(df: DataFrame, *needles: str) -> dict[str, bool]:
-    plan = formatted_plan(df)
-    return {n: (n in plan) for n in needles}

@@ -16,7 +16,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ozone_spark import tables
+from ozone_spark import session, tables
 from ozone_spark.functions import (
     dedup, linkage, mining, multimodal, pipeline, similarity, sketch, text)
 from ozone_spark.functions.bins import bin_sql
@@ -47,19 +47,15 @@ NOW_MS = tables.NOW_MS
 # instead).  They are persisted together, in this order, on a session's
 # first views() call, so every later query sees the same CacheManager
 # state whichever views it touches; the rest are built when first asked.
+# A session's view maps, keyed by sf_dir, live in its state.
 RESIDENT_VIEWS = ("keys", "locations", "containers", "replicas",
                   "datanodes", "directories", "snap1", "snap2",
                   "open_keys", "deleted_keys", "acl_entries",
                   "documents", "embeddings", "events")
 
-# the view maps live on the session object, keyed by sf_dir: they are
-# released with the session (their DataFrames reference it, so a weak
-# session-keyed dict would pin it) and a recycled id() cannot alias them
-_VIEWS_ATTR = "_ozone_spark_views"
-
 
 def views(spark: SparkSession, sf_dir: str) -> tables.NamespaceViews:
-    per_session = vars(spark).setdefault(_VIEWS_ATTR, {})
+    per_session = session.state(spark).setdefault("views", {})
     if sf_dir not in per_session:
         v = tables.namespace_views(spark, sf_dir)
         for name in RESIDENT_VIEWS:

@@ -9,8 +9,6 @@ from ._base import *  # noqa: F401,F403 — shared registry namespace
 from .q_text import _NORM  # noqa: F401 — cross-domain helper
 from .q_r8 import _INGEST_DEDUP_ORACLE  # noqa: F401 — shared oracle
 
-_INGEST_STAGE_MEMO: dict = {}  # (session, sf_dir) -> staged source dir
-
 
 def _streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain wrapper: resident corpus = doc_id % 10 <> 0, the ingest
@@ -20,8 +18,8 @@ def _streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the drained union is gated against the SAME DuckDB oracle as the
     batch incremental_ingest_dedup.
 
-    The staged SOURCE directory is session-memoized per (session,
-    sf_dir) — fixture residency, same argument as the media tables: the
+    The staged SOURCE directory is memoized per sf_dir in the session's
+    state — fixture residency, same argument as the media tables: the
     stage write fabricates the stream's input files (in production the
     arriving files ARE the input), and its bytes are a deterministic
     pure function of the immutable fixture (filter + sorted round-robin
@@ -34,14 +32,13 @@ def _streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ozone_spark.streaming import windows as swin
 
     docs = views(spark, sf_dir)["documents"]
-    skey = (id(spark.sparkContext), sf_dir)
-    staged = _INGEST_STAGE_MEMO.get(skey)
+    stages = session.state(spark).setdefault("ingest_stage", {})
+    staged = stages.get(sf_dir)
     if staged is None or not os.path.isdir(staged):
         staged = tempfile.mkdtemp(prefix="ozs_ingest_src_")
         docs.where("doc_id % 10 = 0").repartition(4) \
             .write.mode("overwrite").parquet(staged)
-        if len(_INGEST_STAGE_MEMO) < 64:
-            _INGEST_STAGE_MEMO[skey] = staged
+        stages[sf_dir] = staged
     stream = swin.read_documents_stream(spark, staged)
     return swin.streaming_ingest_dedup(
         spark, stream, docs.where("doc_id % 10 <> 0"),

@@ -69,6 +69,25 @@ def runtime_confs() -> dict[str, str]:
 _shipped_contexts: weakref.WeakSet[SparkContext] = weakref.WeakSet()
 
 
+def state(spark: SparkSession) -> dict:
+    """The session's cached state: slot caches, memos, view maps.  It
+    lives on the session object, so it is released with the session (a
+    weak session-keyed dict would be pinned by the DataFrames in it) and
+    a recycled id() cannot alias it."""
+    st = vars(spark).get("_ozone_spark_state")
+    if st is None:
+        st = vars(spark)["_ozone_spark_state"] = {}
+        vars(spark.sparkContext).setdefault(
+            "_ozone_spark_sessions", weakref.WeakSet()).add(spark)
+    return st
+
+
+def states(sc: SparkContext) -> list[dict]:
+    """The state of every live session on `sc`, which share its
+    CacheManager."""
+    return [state(s) for s in list(vars(sc).get("_ozone_spark_sessions", ()))]
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make ozone_spark importable on executor Python workers (needed by
     pandas-UDF paths when the driver process runs from another cwd)."""

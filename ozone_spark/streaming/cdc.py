@@ -132,16 +132,6 @@ def histogram_delta(events: DataFrame) -> DataFrame:
     )
 
 
-def table_stats_delta(events: DataFrame) -> DataFrame:
-    """ST4 process() delta for the table-insight counts (A3)."""
-    sign = F.when(F.col("op") == "PUT", F.lit(1)).otherwise(F.lit(-1))
-    return events.agg(
-        F.sum(sign).alias("key_count_delta"),
-        F.sum(sign * F.col("data_size")).alias("bytes_delta"),
-        F.sum(sign * F.col("replicated_size")).alias("replicated_delta"),
-    )
-
-
 class IncrementalViewStore:
     """Parquet-backed materialized-view store with merge-by-key — the
     Recon RocksDB/Derby store analog.

@@ -10,6 +10,7 @@ from collections import Counter
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ozone_spark import session
 from ozone_spark.functions import dedup
 
 CAP = 4
@@ -91,8 +92,8 @@ def test_slot_cache_logs_failed_plan_compare_and_repersists(
         assert second is second_src
         assert not first.storageLevel.useMemory
         assert second.storageLevel.useMemory
-        assert dedup._CACHE_SLOTS[slot] is second
+        assert session.state(spark)["slots"][slot].frame is second
         assert dedup.slot_stats(slot)[slot] == (0, 2)
     finally:
         dedup.release_slots(slot)
-        dedup._SLOT_STATS.pop(slot, None)
+        session.state(spark)["slots"].pop(slot, None)

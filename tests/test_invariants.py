@@ -2507,10 +2507,11 @@ def test_incremental_ingest_dedup_unordered_same_set(spark):
 def test_slot_cache_stats_observable(spark):
     """ADVICE r11: slot hits/misses are counted, so a silent always-miss
     regression (plan-key divergence) is observable."""
+    from ozone_spark import session
     from ozone_spark.functions import dedup as D
     df = spark.range(10).selectExpr("id", "id * 2 AS v")
     slot = "unit_test_stats_slot"
-    D._SLOT_STATS.pop(slot, None)
+    session.state(spark).get("slots", {}).pop(slot, None)
     D._slot_cache(df, slot)
     assert D.slot_stats(slot)[slot] == (0, 1)
     D._slot_cache(spark.range(10).selectExpr("id", "id * 2 AS v"), slot)

@@ -1,6 +1,7 @@
 """Namespace views are built on first use: constructing the facade runs
 no Spark job, a request builds only the views it reads, the registry
-keeps its resident views persisted, and view maps are per session."""
+keeps its resident views persisted, and view maps, slot caches and
+memos are per session (`session.state`)."""
 
 from __future__ import annotations
 
@@ -16,7 +17,7 @@ import pytest
 
 from ozone_spark import registry, session, tables
 from ozone_spark.api import OzoneSparkNamespace
-from ozone_spark.functions import similarity
+from ozone_spark.functions import dedup, similarity
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -85,11 +86,55 @@ def test_view_maps_are_per_session_and_released_with_it(spark, sf_dir):
     assert theirs is not mine
     assert theirs["keys"] is not mine["keys"]
     assert registry.views(spark, sf_dir) is mine
-    gone = weakref.ref(theirs)
-    del other, theirs
+    # the dropped session also fills a slot and the partition-count memo
+    frame = dedup._slot_cache(dedup._spread(
+        other.range(7).selectExpr("id AS doc_id", "'dropped' AS tag")),
+        "dropped_session_slot")
+    st = session.state(other)
+    assert st["slots"]["dropped_session_slot"].frame is frame
+    assert len(st["nparts"]) == 1
+    frame.unpersist()
+
+    class Probe:
+        pass
+
+    st["probe"] = probe = Probe()
+    gone = [weakref.ref(x) for x in (other, theirs, frame, probe)]
+    del other, theirs, frame, st, probe
     _reactivate(spark)
     gc.collect()
-    assert gone() is None
+    assert [g() for g in gone] == [None] * 4
+
+
+def test_slot_caches_and_counts_are_per_session(spark):
+    """Two sessions cache different plans under one slot name: neither
+    evicts the other's frame, and each counts only its own hits and
+    misses.  A released twin stays cached while another session's slot
+    holds the same plan: they share the context's CacheManager entry."""
+    slot = "per_session_slot"
+    other = spark.newSession()
+    try:
+        mine = dedup._slot_cache(spark.range(10).toDF("doc_id"), slot)
+        theirs = dedup._slot_cache(other.range(20).toDF("doc_id"), slot)
+        assert dedup._slot_cache(spark.range(10).toDF("doc_id"), slot) is mine
+        assert mine.storageLevel.useMemory
+        assert theirs.storageLevel.useMemory
+        _reactivate(spark)
+        assert dedup.slot_stats(slot) == {slot: (1, 1)}
+        _reactivate(other)
+        assert dedup.slot_stats(slot) == {slot: (0, 1)}
+
+        twin = dedup._slot_cache(other.range(10).toDF("doc_id"),
+                                 "per_session_twin")
+        assert twin.sameSemantics(mine)
+        assert sorted(dedup.release_slots("per_session")) == [
+            "per_session_slot", "per_session_twin"]
+        assert not theirs.storageLevel.useMemory
+        assert mine.storageLevel.useMemory
+    finally:
+        _reactivate(spark)
+        dedup.release_slots(slot)
+    assert not mine.storageLevel.useMemory
 
 
 def test_package_ships_to_each_context_object():

@@ -619,15 +619,15 @@ def test_winnowing_signature_stage_no_window_exchange(spark, sf_dir):
     sliding array_min): no Window operator and no exchange beyond
     _spread's round-robin fan-out — the lead()+window formulation's
     full token-stream repartition must not come back."""
-    from ozone_spark import tables
-    from ozone_spark.functions import dedup as dd
+    from ozone_spark import session, tables
     from ozone_spark.functions.dedup import winnowing_fingerprints
     # evict the winnowing_pairs slot cache: Spark's cache plan-matching
     # would otherwise serve this subtree as an InMemoryTableScan whose
     # stored description embeds the cached plan's own exchanges
-    old = dd._CACHE_SLOTS.pop("winnow_fp", None)
-    if old is not None:
-        old.unpersist()
+    old = session.state(spark).get("slots", {}).get("winnow_fp")
+    if old is not None and old.frame is not None:
+        old.frame.unpersist()
+        old.frame = None
     docs = tables.load_table(spark, sf_dir, "documents")
     plan = plan_of(winnowing_fingerprints(docs))
     assert "Window" not in plan
