@@ -208,7 +208,8 @@ def _slot_cache(df: DataFrame, slot: str) -> DataFrame:
     between loads."""
     entry = _slots(df.sparkSession).setdefault(slot, _Slot())
     old = entry.frame
-    if old is not None and _same_plan(df, old, slot):
+    if old is not None and session.same_plan(df, old,
+                                             f"cache slot {slot!r}"):
         entry.hits += 1
         # External-uncache hazard (ADVICE r10 medium): Spark's
         # CacheManager is PLAN-keyed, so two slots holding sameSemantics
@@ -224,31 +225,11 @@ def _slot_cache(df: DataFrame, slot: str) -> DataFrame:
             old.persist()
         return old
     if old is not None:
-        _unpersist(old, slot)
+        session.unpersist(old, f"cache slot {slot!r}")
     entry.misses += 1
     df.persist()
     entry.frame = df
     return df
-
-
-def _same_plan(a: DataFrame, b: DataFrame, slot: str) -> bool:
-    """a.sameSemantics(b); False, logged, when the comparison fails
-    (e.g. on a frame whose session is gone)."""
-    try:
-        return a.sameSemantics(b)
-    except Exception as e:
-        log.warning("cache slot %r: plan comparison failed: %s", slot, e)
-        return False
-
-
-def _unpersist(df: DataFrame, slot: str) -> None:
-    """Unpersist a slot's frame; a failure (ADVICE r10 low #1: a dead
-    session's frame) is logged and aborts none of the caller's other
-    releases."""
-    try:
-        df.unpersist()
-    except Exception as e:
-        log.warning("cache slot %r: unpersist failed: %s", slot, e)
 
 
 def release_slots(*prefixes: str) -> list:
@@ -264,23 +245,17 @@ def release_slots(*prefixes: str) -> list:
     mine = _slots(spark)
     hit = [s for s, c in mine.items() if c.frame is not None
            and (not prefixes or any(s.startswith(p) for p in prefixes))]
-    frames = [mine[s].frame for s in hit]
+    frames = [(f"cache slot {s!r}", mine[s].frame) for s in hit]
     for s in hit:
         mine[s].frame = None
-    # every live session of the context shares its CacheManager
-    kept = [] if spark is None else [
-        c.frame for st in session.states(spark.sparkContext)
-        for c in st.get("slots", {}).values() if c.frame is not None]
-    for s, f in zip(hit, frames):
-        # Plan-keyed twin guard (ADVICE r10 medium): if a RETAINED slot
-        # of any session holds a sameSemantics twin, both frames map to
-        # the same CacheManager entry and unpersisting the released one
-        # would de-cache the survivor (the r10 armed probe's 'probe_rec'
-        # release did exactly this to 'ngram_sh', turning the warm-
-        # regime measurements cold).  Skip the unpersist — the entry
-        # stays owned by the surviving slot.
-        if not any(_same_plan(f, k, s) for k in kept):
-            _unpersist(f, s)
+    # Plan-keyed twin guard (ADVICE r10 medium): if a RETAINED frame of
+    # any session holds a sameSemantics twin, both frames map to the
+    # same CacheManager entry and unpersisting the released one would
+    # de-cache the survivor (the r10 armed probe's 'probe_rec' release
+    # did exactly this to 'ngram_sh', turning the warm-regime
+    # measurements cold).  release_frames skips such an unpersist.
+    if spark is not None:
+        session.release_frames(spark.sparkContext, frames)
     return hit
 
 

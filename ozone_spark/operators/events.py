@@ -909,15 +909,13 @@ def session_concurrency(events: DataFrame, gap_minutes: int = 30,
     The DuckDB oracle is the naive BETWEEN join (its IEJoin handles
     gate-scale sizes), which independently cross-checks the whole
     prefix-sum derivation."""
-    # NULL-user SESSIONS are out of contract (ADVICE r11): the r10
-    # global⋈own inner join dropped them implicitly (NULL joins
-    # nothing); the fused single-groupBy form would retain them with
-    # n_own=0 and count ALL purchases as "concurrent".  Filter them
-    # up front so the fused rewrite keeps the pre-r11 semantics (inert
-    # on shipped fixtures — no NULL-user events exist — but a latent
-    # oracle divergence if they ever do).
-    iv = session_intervals(events, gap_minutes) \
-        .where(F.col("user_id").isNotNull())
+    # NULL-user SESSIONS count with concurrent = 0, as in the oracle,
+    # whose `p.u <> iv.user_id` is never true for them (the LEFT JOIN
+    # keeps the session with no match).  They ride the timeline like
+    # any session; the final select zeroes them, since n_all - n_own
+    # would count every purchase as "concurrent" (n_own is 0: the
+    # NULL-user partition of the own-user window holds no event).
+    iv = session_intervals(events, gap_minutes)
     # NULL-user events must not count as "other users": the own-user
     # correction can never subtract them (NULL joins nothing) and the
     # oracle's `p.u <> iv.user_id` predicate excludes NULLs (ADVICE r8)
@@ -986,7 +984,9 @@ def session_concurrency(events: DataFrame, gap_minutes: int = 30,
         .groupBy("user_id", "session_id")
         .agg(F.sum(F.col("qsign") * F.col("p")).alias("n_all"),
              F.sum(F.col("qsign") * F.col("p_own")).alias("n_own"))
-        .select((F.col("n_all") - F.col("n_own")).alias("concurrent"))
+        .select(F.when(F.col("user_id").isNull(), F.lit(0))
+                .otherwise(F.col("n_all") - F.col("n_own"))
+                .alias("concurrent"))
     )
     return (
         per_session.groupBy("concurrent")

@@ -44,10 +44,12 @@ NOW_MS = tables.NOW_MS
 # the derived namespace views are this engine's base tables — keep the
 # hot ones resident (they are small relative to the raw fact tables; at
 # real scale these are the laid-out parquet tables of ozone_spark.layout
-# instead).  They are persisted together, in this order, on a session's
-# first views() call, so every later query sees the same CacheManager
-# state whichever views it touches; the rest are built when first asked.
-# A session's view maps, keyed by sf_dir, live in its state.
+# instead).  A resident view is persisted when it is first built, so a
+# session caches only the views it reads.  A derived resident view
+# (directories, snap1/snap2, open_keys, deleted_keys) fetches its source
+# through the same map, which builds and persists `keys` first, so its
+# cached plan reads the source's in-memory relation.  A session's view
+# maps, keyed by sf_dir, live in its state.
 RESIDENT_VIEWS = ("keys", "locations", "containers", "replicas",
                   "datanodes", "directories", "snap1", "snap2",
                   "open_keys", "deleted_keys", "acl_entries",
@@ -57,10 +59,8 @@ RESIDENT_VIEWS = ("keys", "locations", "containers", "replicas",
 def views(spark: SparkSession, sf_dir: str) -> tables.NamespaceViews:
     per_session = session.state(spark).setdefault("views", {})
     if sf_dir not in per_session:
-        v = tables.namespace_views(spark, sf_dir)
-        for name in RESIDENT_VIEWS:
-            v[name].persist()
-        per_session[sf_dir] = v
+        per_session[sf_dir] = tables.NamespaceViews(
+            spark, sf_dir, RESIDENT_VIEWS)
     return per_session[sf_dir]
 
 

@@ -317,7 +317,8 @@ _REWRITE_PENDING: dict[str, int] = {
     "ivf_list_balance": 12,
     "ivf_recall": 12,
     "ivf_probe_sweep": 12,
-    # NULL-user session filter (inert on fixtures, plan adds a filter):
+    # NULL-user sessions kept with concurrent = 0, as the oracle's LEFT
+    # JOIN does (inert on fixtures, plan changes):
     "session_concurrency": 12,
 }
 

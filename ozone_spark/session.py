@@ -13,7 +13,7 @@ import os
 import weakref
 
 from pyspark import SparkContext
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 log = logging.getLogger(__name__)
 
@@ -86,6 +86,66 @@ def states(sc: SparkContext) -> list[dict]:
     """The state of every live session on `sc`, which share its
     CacheManager."""
     return [state(s) for s in list(vars(sc).get("_ozone_spark_sessions", ()))]
+
+
+def held_frames(st: dict) -> list[tuple[str, DataFrame]]:
+    """(label, frame) for every frame a session state keeps persisted:
+    its slot frames, its BFS frontier frames and the resident views its
+    view maps have built."""
+    held = [(f"cache slot {s!r}", c.frame)
+            for s, c in st.get("slots", {}).items() if c.frame is not None]
+    held += [("bfs frontier", f) for f in st.get("bfs", ())]
+    held += [(f"view {n!r}", v[n]) for v in st.get("views", {}).values()
+             for n in v.built() if n in v.resident]
+    return held
+
+
+def same_plan(a: DataFrame, b: DataFrame, what: str) -> bool:
+    """a.sameSemantics(b); False, logged, when the comparison fails
+    (e.g. on a frame whose session is gone)."""
+    try:
+        return a.sameSemantics(b)
+    except Exception as e:
+        log.warning("%s: plan comparison failed: %s", what, e)
+        return False
+
+
+def unpersist(df: DataFrame, what: str) -> None:
+    """df.unpersist(); a failure (a dead session's frame) is logged, not
+    raised, so it aborts none of the caller's other releases."""
+    try:
+        df.unpersist()
+    except Exception as e:
+        log.warning("%s: unpersist failed: %s", what, e)
+
+
+def release_frames(sc: SparkContext,
+                   frames: list[tuple[str, DataFrame]]) -> None:
+    """Unpersist each (label, frame) its holder has already let go of.
+    The CacheManager is plan-keyed, so a frame whose plan a frame still
+    held by a live session on `sc` shares (`sameSemantics`) maps to that
+    frame's cache entry: it is skipped, and the entry stays cached."""
+    kept = [f for st in states(sc) for _, f in held_frames(st)]
+    for what, f in frames:
+        if not any(same_plan(f, k, what) for k in kept):
+            unpersist(f, what)
+
+
+def release(spark: SparkSession) -> list[str]:
+    """Unpersist everything the session's state keeps persisted (slot
+    frames, BFS frontiers, resident views) before the session is
+    dropped, and return their labels.  The slot counters and the memos
+    stay; the view maps go, so a later request builds and persists its
+    views again.  Cache entries another live session on the context
+    still holds stay cached (see release_frames)."""
+    st = state(spark)
+    frames = held_frames(st)
+    for c in st.get("slots", {}).values():
+        c.frame = None
+    st.pop("bfs", None)
+    st.pop("views", None)
+    release_frames(spark.sparkContext, frames)
+    return [what for what, _ in frames]
 
 
 def _ship_package(spark: SparkSession) -> None:

@@ -36,7 +36,7 @@ dataSize/replication/creationTime/owner), OMDBDefinition.java:209-273.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator, Mapping
+from collections.abc import Callable, Iterable, Iterator, Mapping
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -625,12 +625,15 @@ VIEW_NAMES: tuple[str, ...] = (*DRIVER_TABLES, *_DERIVED)
 class NamespaceViews(Mapping[str, DataFrame]):
     """The driver tables and derived namespace views of one session and
     data dir, by name.  An entry is built on first access and then
-    memoized.  `in`, `len`, iteration and `keys()` build nothing;
+    memoized; an entry named in `resident` is persisted right after it
+    is built.  `in`, `len`, iteration and `keys()` build nothing;
     `values()` and `items()` build each entry as they reach it."""
 
-    def __init__(self, spark: SparkSession, sf_dir: str):
+    def __init__(self, spark: SparkSession, sf_dir: str,
+                 resident: Iterable[str] = ()):
         self.spark = spark
         self.sf_dir = sf_dir
+        self.resident = frozenset(resident)
         self._built: dict[str, DataFrame] = {}
 
     def __getitem__(self, name: str) -> DataFrame:
@@ -642,6 +645,8 @@ class NamespaceViews(Mapping[str, DataFrame]):
                 df = load_table(self.spark, self.sf_dir, name)
             else:
                 raise KeyError(name)
+            if name in self.resident:
+                df.persist()
             self._built[name] = df
         return self._built[name]
 

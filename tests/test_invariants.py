@@ -2672,6 +2672,55 @@ def test_session_concurrency_matches_naive_pair_join(spark, t):
     assert fast == [tuple(r) for r in naive.collect()]
 
 
+def test_session_concurrency_keeps_null_user_sessions_at_zero(spark):
+    """NULL-user sessions count with concurrent = 0 and NULL-user
+    purchases count for no one, exactly as the registry oracle's LEFT
+    JOIN on `p.u <> iv.user_id` does (run here in DuckDB)."""
+    import datetime as dt
+
+    import duckdb
+    import pandas as pd
+
+    from ozone_spark import registry
+    from ozone_spark.operators import events as eops
+    from tests.util import assert_match
+
+    t0 = dt.datetime(2024, 3, 1)
+    # (seconds after t0, user, type): two NULL-user sessions (the
+    # first spans other users' purchases), NULL-user purchases inside
+    # user 3's session, and users 1 and 2 overlapping each other
+    spec = [(0, 1, "view"), (100, 1, "purchase"), (5000, 1, "view"),
+            (50, 2, "purchase"), (120, 2, "purchase"),
+            (10, None, "view"), (60, None, "purchase"),
+            (200, None, "view"), (10000, None, "purchase"),
+            (9990, 3, "view"), (10000, None, "purchase"),
+            (10010, 3, "view"), (10005, 2, "purchase")]
+    pdf = pd.DataFrame(
+        [(i, t0 + dt.timedelta(seconds=s), u, e)
+         for i, (s, u, e) in enumerate(spec)],
+        columns=["event_id", "ts", "user_id", "event_type"])
+    pdf["user_id"] = pdf["user_id"].astype("Int64")
+    events = spark.createDataFrame(
+        [(int(r.event_id), r.ts.to_pydatetime(),
+          None if pd.isna(r.user_id) else int(r.user_id), r.event_type)
+         for r in pdf.itertuples()],
+        "event_id long, ts timestamp, user_id long, event_type string")
+    oracle = {q.name: q.oracle for q in registry._REGISTRY_ORDER}[
+        "session_concurrency"]
+    con = duckdb.connect()
+    con.register("events", pdf)
+    try:
+        got = eops.session_concurrency(events)
+        assert_match(got, oracle, con, "session_concurrency")
+        # zero: both NULL-user sessions, user 1's second and user 2's
+        # last; one: user 1's first, user 2's first, user 3's (user 2
+        # at 10005 — the NULL-user purchases count for no one)
+        assert {r.concurrent: r.n_sessions for r in got.collect()} == {
+            0: 4, 1: 3}
+    finally:
+        con.close()
+
+
 def test_record_linkage_symspell_recall_is_total(spark, t):
     """Symmetric-delete blocking catches EVERY 1-edit pair by
     construction, so recall is exactly 1.0 for all three perturbation

@@ -1,7 +1,8 @@
 """Namespace views are built on first use: constructing the facade runs
 no Spark job, a request builds only the views it reads, the registry
-keeps its resident views persisted, and view maps, slot caches and
-memos are per session (`session.state`)."""
+persists each resident view when it is first built, view maps, slot
+caches and memos are per session (`session.state`), and
+`session.release` frees what a session keeps cached."""
 
 from __future__ import annotations
 
@@ -61,22 +62,90 @@ def test_sql_resolves_every_view(spark, sf_dir):
     assert set(ns.t.built()) == set(tables.VIEW_NAMES)
 
 
+def _cache_builder(df):
+    """The CacheManager's in-memory builder for `df`'s plan."""
+    cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    return cm.lookupCachedData(df._jdf).get().cachedRepresentation() \
+        .cacheBuilder()
+
+
+def _scanned_caches(df) -> list:
+    """The cache builders the leaves of `df`'s cached plan scan (None
+    for a leaf that is not an in-memory scan)."""
+    plan = _cache_builder(df).cachedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+    leaves = plan.collectLeaves()
+    return [leaf.relation().cacheBuilder()
+            if leaf.nodeName() == "InMemoryTableScan" else None
+            for leaf in (leaves.apply(i) for i in range(leaves.size()))]
+
+
 def test_registry_persists_resident_views_and_builds_rest_on_demand(
         spark, sf_dir):
-    registry.views(spark, sf_dir)       # the shared cache entries exist
     other = spark.newSession()
     try:
         v = registry.views(other, sf_dir)
-        assert set(v.built()) == set(registry.RESIDENT_VIEWS) | {
-            "orders", "lineitem"}
-        assert "snap3" not in v.built()
-        v["snap3"]
-        assert "snap3" in v.built()
+        assert v.built() == ()
         assert registry.views(other, sf_dir) is v
-        cached = {n for n, df in v.items() if df.storageLevel.useMemory}
-        assert cached == set(registry.RESIDENT_VIEWS)
+        dirs = v["directories"]
+        assert v.built() == ("orders", "keys", "directories")
+        cached = {n for n in v.built() if v[n].storageLevel.useMemory}
+        assert cached == {"keys", "directories"}
+        # the derived view's cached plan reads its source's cache
+        scanned = _scanned_caches(dirs)
+        assert scanned and all(b == _cache_builder(v["keys"])
+                               for b in scanned)
+        v["snap3"]
+        assert v.built()[-1] == "snap3"
+        assert not v["snap3"].storageLevel.useMemory
     finally:
         _reactivate(spark)
+
+
+_RELEASE = r"""
+import sys
+from ozone_spark import registry, session
+from ozone_spark.functions import dedup
+from ozone_spark.operators import fso
+from ozone_spark.session import get_spark
+
+sf_dir = sys.argv[1]
+base = get_spark("release", cpus=1)
+cm = base._jsparkSession.sharedState().cacheManager()
+a, b = base.newSession(), base.newSession()
+va, vb = registry.views(a, sf_dir), registry.views(b, sf_dir)
+va["keys"].count()
+vb["keys"].count()
+dedup._slot_cache(a.range(5).toDF("doc_id"), "release_slot")
+fso.directory_delete_expansion(va["directories"], va["keys"], "/vol0")
+print("A", sorted(session.release(a)))
+print("A-MAP", registry.views(a, sf_dir).built())
+print("B-KEYS", vb["keys"].storageLevel.useMemory, cm.isEmpty())
+print("B", sorted(session.release(b)))
+print("EMPTY", cm.isEmpty())
+base.stop()
+"""
+
+
+def test_release_unpersists_a_session_but_not_a_live_twin(tmp_path, sf_dir):
+    """A fresh context, so nothing else is cached: releasing A frees its
+    slot, BFS frontiers and resident views but keeps the `keys` entry B
+    shares; releasing B then empties the CacheManager."""
+    env = {**os.environ, "PYTHONPATH": REPO, "SPARK_DRIVER_MEMORY": "1g"}
+    out = subprocess.run([sys.executable, "-c", _RELEASE, sf_dir],
+                         cwd=tmp_path, env=env, capture_output=True,
+                         text=True, timeout=300)
+    lines = dict(ln.split(" ", 1) for ln in out.stdout.splitlines()
+                 if ln.split(" ", 1)[0] in
+                 ("A", "A-MAP", "B-KEYS", "B", "EMPTY"))
+    assert lines.get("A", "").startswith("['bfs frontier'"), out.stderr[-2000:]
+    assert "\"cache slot 'release_slot'\"" in lines["A"]
+    assert "\"view 'directories'\", \"view 'keys'\"" in lines["A"]
+    assert lines["A-MAP"] == "()"
+    assert lines["B-KEYS"] == "True False"
+    assert lines["B"] == "[\"view 'keys'\"]"
+    assert lines["EMPTY"] == "True"
 
 
 def test_view_maps_are_per_session_and_released_with_it(spark, sf_dir):

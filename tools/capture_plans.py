@@ -13,7 +13,8 @@ Usage: python tools/capture_plans.py <tag> [--all | query ...]
 
 The plan text is written NORMALIZED (see `normalize`): expression ids,
 lambda-variable ids, exchange plan ids, RDD ids and temp / checkpoint /
-warehouse paths are replaced by fixed placeholders, and the header
+warehouse paths are replaced by fixed placeholders, AQE stage numbers
+and codegen ids are relabeled by first appearance, and the header
 carries neither the tag nor the capture time (those go to stderr).
 Captures of the same query from two checkouts therefore compare with
 plain `diff`:
@@ -72,6 +73,39 @@ _ID_RULES = [
 ]
 
 
+# AQE numbers query stages, and whole-stage codegen numbers its groups,
+# in the order concurrent stages happen to run, so these ids can swap
+# between two runs of one plan.  `_renumber` relabels them by order of
+# first appearance: which operators share a stage or a codegen group is
+# kept, the run order is not.  Each adaptive plan (a cached relation's
+# plan nests one) counts from 0 and 1 again, and the detail list closes
+# its nodes with its `(N) AdaptiveSparkPlan` entry, so the relabeling
+# restarts after each such entry.
+_STAGE_ARG = re.compile(
+    r"^(\(\d+\) \w*QueryStage\b.*\n(?:.+\n)*?Arguments: )(\d+)()$",
+    re.MULTILINE)
+_CODEGEN_ID = re.compile(r"(\[codegen id : )(\d+)(\])")
+_ADAPTIVE_END = re.compile(r"^\(\d+\) AdaptiveSparkPlan\n", re.MULTILINE)
+
+
+def _renumber(pat: re.Pattern, plan: str, first: int) -> str:
+    """Relabel group 2 of each match of `pat` by order of first
+    appearance, counting from `first`."""
+    seen: dict[str, int] = {}
+
+    def relabel(m: re.Match) -> str:
+        n = seen.setdefault(m[2], first + len(seen))
+        return f"{m[1]}{n}{m[3]}"
+    return pat.sub(relabel, plan)
+
+
+def _renumber_stages(plan: str) -> str:
+    cuts = [0, *(m.end() for m in _ADAPTIVE_END.finditer(plan)), len(plan)]
+    return "".join(
+        _renumber(_CODEGEN_ID, _renumber(_STAGE_ARG, plan[a:b], 0), 1)
+        for a, b in zip(cuts, cuts[1:]))
+
+
 def normalize(plan: str) -> str:
     """Replace every run-specific token of a formatted plan with a fixed
     placeholder, so two captures of the same plan are byte-identical."""
@@ -82,7 +116,7 @@ def normalize(plan: str) -> str:
                   "<warehouse>", plan)
     for pat, rep in _ID_RULES:
         plan = pat.sub(rep, plan)
-    return plan
+    return _renumber_stages(plan)
 
 
 def main() -> int:
