@@ -13,7 +13,8 @@ call here, returning DataFrames instead of RPC responses.
 
 from __future__ import annotations
 
-from typing import Any
+import functools
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -25,15 +26,31 @@ from ozone_spark.operators import (
 from ozone_spark.session import apply_runtime_confs
 
 
+def _report(build: Callable[[Any], DataFrame]) -> Callable[[Any], DataFrame]:
+    """A parameter-free endpoint: its DataFrame is built on the first
+    call and the same lazy frame is returned on every later one, so a
+    request pays the plan build once per handle.  Each call's action
+    still plans and runs the query; nothing is cached."""
+    @functools.wraps(build)
+    def endpoint(self) -> DataFrame:
+        df = self._reports.get(build.__name__)
+        if df is None:
+            df = self._reports[build.__name__] = build(self)
+        return df
+    return endpoint
+
+
 class OzoneSparkNamespace:
     """Handle over the namespace tables; every method is a thin
     delegation to the operator library (citations live there).  The
     tables are read and derived on first use, so construction runs no
-    Spark job."""
+    Spark job.  The parameter-free reports are built once per handle
+    (`_report`)."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = apply_runtime_confs(spark)
         self.t = tables.namespace_views(spark, sf_dir)
+        self._reports: dict[str, DataFrame] = {}
 
     # ---- key-space listings (ozone sh / S3 gateway) ----
     def list_keys(self, prefix: str = "", start_key: str = "",
@@ -43,6 +60,7 @@ class OzoneSparkNamespace:
     def list_buckets(self, volume: str | None = None) -> DataFrame:
         return listing.list_buckets(self.t["keys"], volume)
 
+    @_report
     def list_volumes(self) -> DataFrame:
         return admin.list_volumes(self.t["keys"])
 
@@ -69,29 +87,36 @@ class OzoneSparkNamespace:
                                               self.t["keys"], path)
 
     # ---- snapshots ----
+    @_report
     def list_snapshots(self) -> DataFrame:
         return admin.list_snapshots(self.t["snap1"], self.t["snap2"])
 
+    @_report
     def snapshot_diff(self) -> DataFrame:
         return snops.snapshot_diff(self.t["snap1"], self.t["snap2"])
 
     # ---- Recon analytics ----
     def du(self, path: str, top_k: int | None = None) -> DataFrame:
-        return nops.du_children(self.t["keys"], path, top_k)
+        return nops.rollup_children(self.namespace_summary(), path, top_k)
 
+    @_report
     def namespace_summary(self) -> DataFrame:
         return nops.namespace_rollup(self.t["keys"])
 
+    @_report
     def quota_usage(self) -> DataFrame:
         return nops.quota_usage(self.t["keys"])
 
+    @_report
     def file_size_histogram(self) -> DataFrame:
         return insights.file_size_histogram(self.t["keys"])
 
+    @_report
     def cluster_state(self) -> DataFrame:
         return insights.cluster_state(self.t["keys"], self.t["containers"],
                                       self.t["datanodes"])
 
+    @_report
     def unhealthy_containers(self) -> DataFrame:
         return cops.container_health(self.t["containers"], self.t["replicas"])
 
@@ -99,6 +124,7 @@ class OzoneSparkNamespace:
         return cops.keys_for_container(self.t["locations"], self.t["keys"],
                                        container_id)
 
+    @_report
     def datanode_utilization(self) -> DataFrame:
         return insights.datanode_utilization(
             self.t["containers"], self.t["replicas"], self.t["datanodes"])

@@ -157,7 +157,13 @@ def deleted_dirs_summary(keys: DataFrame,
 def du_children(keys: DataFrame, parent: str, top_k: int | None = None) -> DataFrame:
     """O5: immediate children of `parent` ordered by subtree size desc
     (top consumers first), deterministic tie-break on path."""
-    rollup = namespace_rollup(keys)
+    return rollup_children(namespace_rollup(keys), parent, top_k)
+
+
+def rollup_children(rollup: DataFrame, parent: str,
+                    top_k: int | None = None) -> DataFrame:
+    """du_children over a namespace_rollup frame the caller already
+    holds (the facade builds one per handle and filters it per path)."""
     prefix = parent.rstrip("/") + "/"
     depth = prefix.count("/")
     children = rollup.where(

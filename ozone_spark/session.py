@@ -182,6 +182,23 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+# generated classes the JVM keeps compiled (see get_spark)
+CODEGEN_CACHE_ENTRIES = 2000
+
+
+def codegen_stats(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, seconds spent compiling them) by the JVM's
+    code generator since it started; both JVM-wide, so a caller reads
+    the delta around the work it measures.  A compile is a miss of the
+    generated-code cache."""
+    jvm = spark._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+        .CodeGenerator.compileTime()
+    return int(n), ns / 1e9
+
+
 def get_spark(app_name: str = "ozone-spark", cpus: int | None = None) -> SparkSession:
     # driver.memory stays a MODEST 8g by MEASUREMENT, not oversight: an
     # A/B at the 30x probe corpus (idle host, same query order) ran the
@@ -197,6 +214,11 @@ def get_spark(app_name: str = "ozone-spark", cpus: int | None = None) -> SparkSe
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # static conf, read once per JVM when the first query generates
+        # code: the facade's ten request kinds alone need ~140 generated
+        # classes, so Spark's default 100-entry cache evicted them in a
+        # cycle and recompiled ~75 of them (~15 ms each) on every pass
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in runtime_confs().items():
         builder = builder.config(k, v)

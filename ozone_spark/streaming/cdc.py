@@ -189,10 +189,15 @@ class IncrementalViewStore:
         if batch_id is not None and batch_id <= self.last_batch_id():
             return  # a replayed micro-batch: already folded in
         delta = delta.withColumn("view_bucket", self._bucket_expr())
-        touched = sorted(
-            r[0] for r in delta.select("view_bucket").distinct().collect())
-        if touched:
-            self._fold_buckets(delta, touched)
+        if self._has_data():
+            touched = sorted(
+                r[0] for r in delta.select("view_bucket").distinct().collect())
+            if touched:
+                self._fold_buckets(delta, touched)
+        else:
+            # nothing to read back or clear: the fold's own write says
+            # which buckets the delta touched, so no pass collects them
+            self._fold_buckets(delta, None)
         if batch_id is not None:
             os.makedirs(self.path, exist_ok=True)
             tmp = self._batch_marker + ".tmp"
@@ -200,9 +205,11 @@ class IncrementalViewStore:
                 f.write(str(batch_id))
             os.replace(tmp, self._batch_marker)
 
-    def _fold_buckets(self, delta: DataFrame, touched: list[int]) -> None:
+    def _fold_buckets(self, delta: DataFrame, touched: list[int] | None) -> None:
+        """Fold `delta` into the store and swap in the `touched` buckets;
+        None (an empty store) swaps in every bucket the fold wrote."""
         merged = delta
-        if self._has_data():
+        if touched is not None:
             # partition-pruned read: untouched buckets are never scanned
             merged = (self.spark.read.parquet(self.path)
                       .where(F.col("view_bucket").isin(touched))
@@ -216,6 +223,9 @@ class IncrementalViewStore:
         tmp = self.path + ".tmpbatch"
         folded.write.mode("overwrite").partitionBy("view_bucket").parquet(tmp)
         os.makedirs(self.path, exist_ok=True)
+        if touched is None:
+            touched = [int(e.split("=", 1)[1]) for e in os.listdir(tmp)
+                       if e.startswith("view_bucket=")]
         for b in touched:  # swap in only the touched buckets
             dst = os.path.join(self.path, f"view_bucket={b}")
             shutil.rmtree(dst, ignore_errors=True)

@@ -15,7 +15,7 @@ import pytest
 from ozone_spark import tables
 from ozone_spark.operators.events import tumbling_daily
 from ozone_spark.streaming import cdc, windows
-from tests.util import canon
+from tests.util import canon, count_jobs
 
 
 @pytest.fixture()
@@ -170,6 +170,34 @@ def test_view_store_skips_replayed_batch_id(spark, tmpdir):
     store.merge(delta, 0)
     assert {r.k: r.v for r in store.current().collect()} == {"a": 2, "b": 4}
     assert store.last_batch_id() == 1
+
+
+def test_view_store_fresh_merge_runs_only_its_fold(spark, tmpdir):
+    """A merge into an empty store skips the touched-bucket collect:
+    it launches the jobs of its fold's write and nothing more, and the
+    view holds every bucket that write produced."""
+    import os
+
+    store = cdc.IncrementalViewStore(spark, f"{tmpdir}/store", ["k"], ["v"])
+    delta = spark.createDataFrame([(f"k{i}", i % 5 - 2) for i in range(200)],
+                                  "k string, v long")
+    fold = (delta.groupBy("k").agg(F.sum("v").alias("v")).where("v != 0")
+            .withColumn("view_bucket", store._bucket_expr()))
+    write = count_jobs(spark, "ozs-fold-write", lambda: fold.write.partitionBy(
+        "view_bucket").parquet(f"{tmpdir}/fold"))
+    merge = count_jobs(spark, "ozs-fresh-merge", lambda: store.merge(delta, 0))
+    assert merge == write
+
+    expected = {r.k: r.v for r in fold.collect()}
+    assert {r.k: r.v for r in store.current().collect()} == expected
+    assert sorted(e for e in os.listdir(f"{tmpdir}/store")
+                  if e.startswith("view_bucket=")) == sorted(
+        f"view_bucket={b}" for b in {r.view_bucket for r in fold.collect()})
+    assert store.last_batch_id() == 0
+    # a later merge reads the store back and folds into it
+    store.merge(delta, 1)
+    assert {r.k: r.v for r in store.current().collect()} == {
+        k: 2 * v for k, v in expected.items()}
 
 
 def test_cdc_incremental_container_index_matches_batch(spark, sf_dir, tmpdir):

@@ -59,3 +59,14 @@ def assert_match(spark_df, oracle_sql: str, con, name: str = "query"):
     if cs != cd:
         diffs = [(a, b) for a, b in zip(cs, cd) if a != b][:5]
         raise AssertionError(f"{name}: value mismatch, first diffs: {diffs}")
+
+
+def count_jobs(spark, group: str, fn) -> int:
+    """Spark jobs `fn()` launches, counted under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

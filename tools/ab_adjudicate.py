@@ -12,6 +12,12 @@ SAME host, interleaved, each measurement in its own cold JVM:
       materialization + one untimed run), then take best-of-3 timed
       reps of the query at the target SF.
 
+Each arm also reports how many classes its JVM's code generator compiled
+during the timed reps, and the seconds it spent on them (read by this
+tool's own `session.codegen_stats`, so both arms use the same probe): a
+generated-code cache that thrashes shows as compiles on every rep, which
+calib does not see.
+
 Alternating arm order cancels linear host drift; cold JVMs per
 measurement remove cross-arm JIT/shuffle-cache contamination.  This is
 the exact method that settled `container_key_index` in round 9 and is
@@ -33,10 +39,16 @@ import statistics
 import subprocess
 import sys
 
+# the compile-count probe both arms run (see the module docstring)
+_PROBE = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "ozone_spark", "session.py")
+
 _RUNNER = r"""
-import json, os, sys, time
+import importlib.util, json, os, sys, time
 repo = sys.argv[1]; name = sys.argv[2]; sf_dir = sys.argv[3]
-reps = int(sys.argv[4])
+reps = int(sys.argv[4]); probe = sys.argv[5]
+spec = importlib.util.spec_from_file_location("_ab_probe", probe)
+_probe = importlib.util.module_from_spec(spec); spec.loader.exec_module(_probe)
 sys.path.insert(0, repo)
 os.chdir(repo)
 from ozone_spark.registry import queries, views
@@ -60,18 +72,22 @@ for _ in range(3):
     cal.append(time.perf_counter() - t0)
 fn(spark, sf_dir).count()  # untimed warm run of the exact plan
 runs = []
+n0, s0 = _probe.codegen_stats(spark)
 for _ in range(reps):
     t0 = time.perf_counter()
     fn(spark, sf_dir).count()
     runs.append(round(time.perf_counter() - t0, 3))
+n1, s1 = _probe.codegen_stats(spark)
 print("ABRESULT " + json.dumps(
-    {"best": min(runs), "runs": runs, "calib": round(min(cal), 3)}))
+    {"best": min(runs), "runs": runs, "calib": round(min(cal), 3),
+     "compiles": n1 - n0, "compile_s": round(s1 - s0, 3)}))
 """
 
 
 def _measure(repo: str, name: str, sf_dir: str, reps: int) -> dict:
     out = subprocess.run(
-        [sys.executable, "-c", _RUNNER, repo, name, sf_dir, str(reps)],
+        [sys.executable, "-c", _RUNNER, repo, name, sf_dir, str(reps),
+         _PROBE],
         capture_output=True, text=True, timeout=1800,
         env={**os.environ, "PYTHONPATH": repo},
     )
@@ -98,18 +114,20 @@ def main() -> int:
                     "sf": args.sf, "rounds": args.rounds,
                     "reps": args.reps, "queries": {}}
     for name in args.queries:
-        rec = {"a_best": [], "b_best": [], "a_calib": [], "b_calib": []}
+        rec = {f"{arm}_{k}": [] for arm in "ab"
+               for k in ("best", "calib", "compiles", "compile_s")}
         for r in range(args.rounds):
             # ABBA ordering: alternate which arm goes first each round
             order = ("a", "b") if r % 2 == 0 else ("b", "a")
             for arm in order:
                 repo = args.arm_a if arm == "a" else args.arm_b
                 m = _measure(repo, name, args.sf, args.reps)
-                rec[f"{arm}_best"].append(m["best"])
-                rec[f"{arm}_calib"].append(m["calib"])
+                for k in ("best", "calib", "compiles", "compile_s"):
+                    rec[f"{arm}_{k}"].append(m[k])
                 print(f"{name} round {r + 1} arm {arm.upper()}: "
                       f"best {m['best']}s runs {m['runs']} "
-                      f"calib {m['calib']}", flush=True)
+                      f"calib {m['calib']} compiles {m['compiles']} "
+                      f"({m['compile_s']}s)", flush=True)
         rec["a_median"] = round(statistics.median(rec["a_best"]), 3)
         rec["b_median"] = round(statistics.median(rec["b_best"]), 3)
         spread_a = (min(rec["a_best"]), max(rec["a_best"]))
