@@ -9,6 +9,14 @@ call here, returning DataFrames instead of RPC responses.
     ns.du("/vol1/b1", top_k=10)                        # Recon /namespace/usage
     ns.snapshot_diff()                                 # ozone sh snapshot diff
     ns.unhealthy_containers()                          # Recon /containers/unhealthy
+
+The parameterized listings (`list_keys`, `list_objects_v2`,
+`list_status`, `container_keys`) are each one SQL template built by a
+single `spark.sql` call that binds the request's values as parameters
+(`session.bound_sql`): a request's build cost does not depend on its
+values, and a new value compiles no new generated class.  The tables
+they read are registered as session temp views on the first listing
+call, not when the handle is constructed.
 """
 
 from __future__ import annotations

@@ -26,6 +26,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.functions import broadcast
 
+from ozone_spark import session
+
 
 def container_key_index(locations: DataFrame) -> DataFrame:
     """J5: containerId -> (#keys, #blocks, bytes) inverted index."""
@@ -39,19 +41,24 @@ def container_key_index(locations: DataFrame) -> DataFrame:
     )
 
 
+# the id is bound inside an array literal: generated code references an
+# array constant but inlines a bare integer, so `container_id = :id`
+# would compile new classes for every id a session has not served
+_KEYS_FOR_CONTAINER = """SELECT db_key, object_id, data_size, block_count, bytes
+  FROM {keys} JOIN (
+    SELECT object_id, count(*) AS block_count, sum(block_len) AS bytes
+    FROM {locations}
+    WHERE array_contains(array(:container_id), container_id)
+    GROUP BY object_id) USING (object_id)
+  ORDER BY db_key"""
+
+
 def keys_for_container(locations: DataFrame, keys: DataFrame,
                        container_id: int) -> DataFrame:
     """J6: /containers/{id}/keys via the index (ContainerEndpoint.java:235-238)."""
-    refs = (
-        locations.where(F.col("container_id") == container_id)
-        .groupBy("object_id")
-        .agg(F.count("*").alias("block_count"), F.sum("block_len").alias("bytes"))
-    )
-    return (
-        keys.join(refs, "object_id")
-        .select("db_key", "object_id", "data_size", "block_count", "bytes")
-        .orderBy("db_key")
-    )
+    return session.bound_sql(
+        _KEYS_FOR_CONTAINER, {"keys": keys, "locations": locations},
+        container_id=container_id)
 
 
 def om_containers_missing_in_scm(locations: DataFrame,

@@ -23,26 +23,31 @@ from pyspark.sql import DataFrame
 from ozone_spark import session
 
 
-def _file_parent(db_key=None):
-    return F.regexp_replace(db_key if db_key is not None else F.col("db_key"),
-                            "/[^/]+$", "")
+# a file key's parent directory path
+_FILE_PARENT = "regexp_replace(db_key, '/[^/]+$', '')"
+
+
+def _file_parent():
+    return F.expr(_FILE_PARENT)
+
+
+_LIST_STATUS = f"""SELECT * FROM (
+    SELECT name, 'DIR' AS entry_type, CAST(NULL AS BIGINT) AS data_size
+    FROM {{directories}} WHERE parent_path = :parent
+    UNION ALL
+    SELECT substring_index(key_name, '/', -1) AS name, 'FILE' AS entry_type,
+           data_size
+    FROM {{keys}} WHERE {_FILE_PARENT} = :parent)
+  ORDER BY name LIMIT :max_rows"""
 
 
 def list_status(directories: DataFrame, keys: DataFrame, parent: str,
                 max_entries: int = 1000) -> DataFrame:
     """S4: immediate children (dirs + files) of `parent`, name-ordered —
     the sorted merge of the two FSO iterators."""
-    dirs = (
-        directories.where(F.col("parent_path") == parent)
-        .select("name", F.lit("DIR").alias("entry_type"),
-                F.lit(None).cast("long").alias("data_size"))
-    )
-    files = (
-        keys.where(_file_parent() == parent)
-        .select(F.substring_index("key_name", "/", -1).alias("name"),
-                F.lit("FILE").alias("entry_type"), "data_size")
-    )
-    return dirs.unionByName(files).orderBy("name").limit(max_entries)
+    return session.bound_sql(
+        _LIST_STATUS, {"directories": directories, "keys": keys},
+        parent=parent, max_rows=max_entries)
 
 
 def directory_delete_expansion(directories: DataFrame, keys: DataFrame,

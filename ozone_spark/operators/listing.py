@@ -13,6 +13,10 @@ with keys stored sorted/partitioned by db_key, Parquet min/max row-group
 stats prune everything outside the prefix (the Spark analog of RocksDB
 seekKey).  orderBy+limit compiles to TakeOrderedAndProject (per-partition
 top-K + driver merge), so no global sort materializes at 100 TB.
+
+`list_keys` and `list_objects_v2` are bound-parameter SQL templates
+(`session.bound_sql`), and every paged listing here shares the one
+page-contract fragment, `page_sql`.
 """
 
 from __future__ import annotations
@@ -20,7 +24,36 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from ozone_spark import session
 from ozone_spark.functions.dedup import bounded_window_key
+
+
+def page_sql(select: str, order: str) -> str:
+    """The reference's shared pagination contract (S1) as one SQL
+    fragment over `select`, a query whose rows are ordered by `order`:
+    fetch :max_rows + 1 rows, derive is_truncated from the overflow row,
+    return the first :max_rows.  ORDER BY + LIMIT compiles to
+    TakeOrderedAndProject, so the window only ever sees <= :max_rows + 1
+    rows: bounded by construction.  Both window functions share one
+    spec, so they run in one Window operator over one sort; the
+    partition key is `bounded_window_key` (a literal key would be folded
+    out of the spec, and WindowExec would warn on every page)."""
+    spec = (f"PARTITION BY pmod(xxhash64({order.split(',')[0]}), 1) "
+            f"ORDER BY {order}")
+    return f"""SELECT * EXCEPT (_rn) FROM (
+  SELECT *, row_number() OVER ({spec}) AS _rn,
+    count(*) OVER ({spec} ROWS BETWEEN UNBOUNDED PRECEDING
+                   AND UNBOUNDED FOLLOWING) > :max_rows AS is_truncated
+  FROM ({select} ORDER BY {order} LIMIT :max_rows + 1))
+WHERE _rn <= :max_rows"""
+
+
+# an omitted parameter is '' and its predicate folds away: `(:p = '' OR
+# pred)` is constant-folded to TRUE or to `pred` once :p is bound
+_LIST_KEYS = page_sql("""SELECT db_key, object_id, data_size, creation_time, owner
+  FROM {keys}
+  WHERE (:prefix = '' OR startswith(db_key, :prefix))
+    AND (:start_key = '' OR db_key > :start_key)""", "db_key")
 
 
 def list_keys(
@@ -31,43 +64,16 @@ def list_keys(
 ) -> DataFrame:
     """S1: one page of the key listing, with the reference's pagination
     contract (maxKeys+1 fetch -> is_truncated; startKey excluded)."""
-    page = keys
-    if prefix:
-        page = page.where(F.col("db_key").startswith(prefix))
-    if start_key:
-        page = page.where(F.col("db_key") > start_key)
-    page = (
-        page.select("db_key", "object_id", "data_size", "creation_time", "owner")
-        .orderBy("db_key")
-        .limit(max_keys + 1)
-    )
-    _k = bounded_window_key("db_key")
-    w_all = Window.partitionBy(_k)
-    rn = Window.partitionBy(_k).orderBy("db_key")
-    return (
-        page.withColumn("_rn", F.row_number().over(rn))
-        .withColumn("is_truncated", F.count("*").over(w_all) > max_keys)
-        .where(F.col("_rn") <= max_keys)
-        .drop("_rn")
-    )
+    return session.bound_sql(_LIST_KEYS, {"keys": keys},
+                             prefix=prefix or "", start_key=start_key or "",
+                             max_rows=max_keys)
 
 
 def _paged(df: DataFrame, order_cols: list[str], max_rows: int) -> DataFrame:
-    """The reference's shared pagination contract (S1): fetch
-    max_rows+1 ordered rows, derive is_truncated from the overflow row,
-    return the first max_rows.  orderBy+limit compiles to
-    TakeOrderedAndProject, so the single-partition window below only
-    ever sees ≤ max_rows+1 rows — bounded by construction."""
-    page = df.orderBy(*order_cols).limit(max_rows + 1)
-    _k = bounded_window_key(order_cols[0])
-    rn = Window.partitionBy(_k).orderBy(*order_cols)
-    w_all = Window.partitionBy(_k)
-    return (
-        page.withColumn("_rn", F.row_number().over(rn))
-        .withColumn("is_truncated", F.count("*").over(w_all) > max_rows)
-        .where(F.col("_rn") <= max_rows)
-        .drop("_rn")
-    )
+    """`page_sql` over a built frame, ordered by `order_cols`."""
+    return session.bound_sql(
+        page_sql("SELECT * FROM {page}", ", ".join(order_cols)),
+        {"page": df}, max_rows=max_rows)
 
 
 def list_multipart_uploads(
@@ -230,6 +236,28 @@ def decode_continue_token(token: str | None) -> str:
         raise ValueError(f"invalid continuation token: {token!r}") from exc
 
 
+# the post-prefix remainder of a key: its first delimiter-terminated
+# segment collapses into a CommonPrefix, a key without one is a Content
+_LIST_OBJECTS_V2 = page_sql("""SELECT * FROM (
+    SELECT entry_type, name, min(data_size) AS data_size FROM (
+      SELECT
+        CASE WHEN instr(rest, :delimiter) > 0 THEN 'COMMON_PREFIX'
+             ELSE 'KEY' END AS entry_type,
+        CASE WHEN instr(rest, :delimiter) > 0
+             THEN concat(:prefix, substring_index(rest, :delimiter, 1),
+                         :delimiter)
+             ELSE key_name END AS name,
+        CASE WHEN instr(rest, :delimiter) > 0 THEN CAST(NULL AS BIGINT)
+             ELSE data_size END AS data_size
+      FROM (SELECT key_name, data_size,
+              substring(key_name, char_length(:prefix) + 1, 1073741824) AS rest
+            FROM {keys}
+            WHERE volume = :volume AND bucket = :bucket
+              AND startswith(key_name, :prefix)))
+    GROUP BY entry_type, name)
+  WHERE (:start_after = '' OR name > :start_after)""", "name")
+
+
 def list_objects_v2(
     keys: DataFrame,
     volume: str,
@@ -252,35 +280,7 @@ def list_objects_v2(
     """
     if continuation_token:
         start_after = decode_continue_token(continuation_token)
-    in_bucket = keys.where(
-        (F.col("volume") == volume) & (F.col("bucket") == bucket)
-        & F.col("key_name").startswith(prefix)
-    )
-    rest = F.substring(F.col("key_name"), len(prefix) + 1, 1 << 30)
-    seg = F.substring_index(rest, delimiter, 1)
-    has_delim = F.instr(rest, delimiter) > 0
-    classified = in_bucket.select(
-        F.when(has_delim, F.lit("COMMON_PREFIX")).otherwise(F.lit("KEY")).alias("entry_type"),
-        F.when(has_delim, F.concat(F.lit(prefix), seg, F.lit(delimiter)))
-        .otherwise(F.col("key_name")).alias("name"),
-        F.when(has_delim, F.lit(None).cast("long")).otherwise(F.col("data_size")).alias("data_size"),
-    )
-    entries = (
-        classified.groupBy("entry_type", "name")
-        .agg(F.min("data_size").alias("data_size"))
-    )
-    if start_after:
-        entries = entries.where(F.col("name") > start_after)
-    page = entries.orderBy("name").limit(max_keys + 1)
-    # lit partition keys get constant-folded OUT of the window spec and
-    # WindowExec then warns on every run of this page-bounded window —
-    # the column-derived zero keeps the spec non-empty (dedup.py:
-    # bounded_window_key rationale)
-    rn = Window.partitionBy(bounded_window_key("name")).orderBy("name")
-    w_all = Window.partitionBy(bounded_window_key("name"))
-    return (
-        page.withColumn("_rn", F.row_number().over(rn))
-        .withColumn("is_truncated", F.count("*").over(w_all) > max_keys)
-        .where(F.col("_rn") <= max_keys)
-        .drop("_rn")
-    )
+    return session.bound_sql(
+        _LIST_OBJECTS_V2, {"keys": keys}, volume=volume, bucket=bucket,
+        prefix=prefix, delimiter=delimiter, start_after=start_after or "",
+        max_rows=max_keys)

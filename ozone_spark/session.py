@@ -11,6 +11,8 @@ from __future__ import annotations
 import logging
 import os
 import weakref
+from collections import OrderedDict
+from typing import Any
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
@@ -135,17 +137,59 @@ def release(spark: SparkSession) -> list[str]:
     """Unpersist everything the session's state keeps persisted (slot
     frames, BFS frontiers, resident views) before the session is
     dropped, and return their labels.  The slot counters and the memos
-    stay; the view maps go, so a later request builds and persists its
-    views again.  Cache entries another live session on the context
-    still holds stay cached (see release_frames)."""
+    stay; the view maps and the frame views go, so a later request
+    builds and persists its views again.  Cache entries another live
+    session on the context still holds stay cached (see
+    release_frames)."""
     st = state(spark)
     frames = held_frames(st)
     for c in st.get("slots", {}).values():
         c.frame = None
     st.pop("bfs", None)
     st.pop("views", None)
+    for name in st.pop("frame_views", {}).values():
+        spark.catalog.dropTempView(name)
     release_frames(spark.sparkContext, frames)
     return [what for what, _ in frames]
+
+
+# temp views a session keeps over the frames its SQL templates read;
+# past this many the least recently read is dropped
+FRAME_VIEWS = 64
+FRAME_VIEW_PREFIX = "ozone_spark_frame_"
+
+
+def frame_view(df: DataFrame) -> str:
+    """The name of a temp view over `df` in its session, registered on
+    the first call and reused by every later call with the same frame
+    object (the frame itself is the key, so a recycled id() cannot
+    alias it).  A query that read the view keeps its plan after the view
+    is dropped: `spark.sql` resolves views when it builds the frame."""
+    spark = df.sparkSession
+    st = state(spark)
+    views = st.setdefault("frame_views", OrderedDict())
+    name = views.get(df)
+    if name is not None:
+        views.move_to_end(df)
+        return name
+    seq = st["frame_view_seq"] = st.get("frame_view_seq", 0) + 1
+    name = views[df] = f"{FRAME_VIEW_PREFIX}{seq}"
+    df.createOrReplaceTempView(name)
+    while len(views) > FRAME_VIEWS:
+        spark.catalog.dropTempView(views.popitem(last=False)[1])
+    return name
+
+
+def bound_sql(text: str, frames: dict[str, DataFrame],
+              **args: Any) -> DataFrame:
+    """One `spark.sql` call: `text` reads each `{name}` from the view
+    over `frames[name]` (`frame_view`) and binds `args` to its `:name`
+    markers.  Values are only ever bound, never formatted into the text,
+    so no value is parsed as SQL and the text, and with it the parse, is
+    the same for every request."""
+    views = {k: frame_view(df) for k, df in frames.items()}
+    spark = next(iter(frames.values())).sparkSession
+    return spark.sql(text.format(**views), args=args)
 
 
 def _ship_package(spark: SparkSession) -> None:

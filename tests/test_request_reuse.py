@@ -1,13 +1,14 @@
 """A serving session pays code generation and plan building once per
 request shape: the generated-code cache holds the facade's working set,
-and the parameter-free reports return one lazily built DataFrame per
-handle, which every call still plans and runs."""
+the parameter-free reports return one lazily built DataFrame per
+handle, which every call still plans and runs, and the listings bind
+their values, so a new value compiles nothing and registers no view."""
 
 from __future__ import annotations
 
 import pytest
 
-from ozone_spark import api
+from ozone_spark import api, session
 from ozone_spark.operators import (
     admin, containers as cops, insights, namespace as nops,
     snapshot as snops,
@@ -94,3 +95,63 @@ def test_du_over_the_memoized_rollup_equals_du_children(ns, path):
     assert ns.du(path, 10).collect() == want
     assert ns.du(path).collect() == nops.du_children(
         ns.t["keys"], path).collect()
+
+
+# ---- bound-parameter listings ------------------------------------------------
+
+def test_new_container_ids_compile_no_class(spark, ns, con):
+    """500 ids against a 55-container fixture, so most are absent: each
+    id is a bound value, so after the first one at most a few classes
+    compile (a page shape AQE has not yet planned), not two per id."""
+    from ozone_spark.oracle import with_views
+
+    pages = {0: ns.container_keys(0).limit(PAGE).collect()}
+    n0, _ = codegen_stats(spark)
+    for cid in range(1, 500):
+        pages[cid] = ns.container_keys(cid).limit(PAGE).collect()
+    assert codegen_stats(spark)[0] - n0 <= 4
+    # the page cross-check perfbench makes against DuckDB
+    sql = with_views(
+        "SELECT db_key FROM keys JOIN (SELECT DISTINCT object_id "
+        "FROM locations WHERE container_id = $1) USING (object_id) "
+        "ORDER BY db_key LIMIT $2", ["keys", "locations"])
+    for cid in [*range(0, 60, 3), *range(60, 500, 40)]:
+        want = [r[0] for r in con.execute(sql, [cid, PAGE]).fetchall()]
+        assert [r.db_key for r in pages[cid]] == want, cid
+    assert any(pages[c] for c in range(55))
+    assert not any(pages[c] for c in range(55, 500))
+
+
+def _frame_views(spark) -> list[str]:
+    """The session's temp views, each of which must be a frame view."""
+    names = sorted(t.name for t in spark.catalog.listTables()
+                   if t.isTemporary)
+    assert all(n.startswith(session.FRAME_VIEW_PREFIX) for n in names)
+    return names
+
+
+def test_listing_views_are_registered_once_and_released(spark, sf_dir):
+    other = spark.newSession()
+    try:
+        ns2 = api.OzoneSparkNamespace(other, sf_dir)
+        assert _frame_views(other) == []   # construction registers nothing
+        counts = []
+        for _ in range(3):
+            for _, call in REQUESTS[:4]:
+                call(ns2).limit(PAGE).collect()
+            counts.append(len(_frame_views(other)))
+        # keys, directories and locations, once each
+        assert counts == [3, 3, 3]
+        # handles come and go: the session keeps a bounded set of views
+        for _ in range(session.FRAME_VIEWS + 10):
+            api.OzoneSparkNamespace(other, sf_dir).list_keys("/vol1/")
+        assert len(_frame_views(other)) == session.FRAME_VIEWS
+        session.release(other)
+        assert _frame_views(other) == []
+        # a released session registers its views again on the next call
+        assert ns2.list_keys("/vol1/", "", 5).count() == 5
+        assert len(_frame_views(other)) == 1
+    finally:
+        # make the shared session the active one again
+        spark.createDataFrame([(1,)], "x int")
+        spark.newSession()

@@ -16,7 +16,10 @@ Each arm also reports how many classes its JVM's code generator compiled
 during the timed reps, and the seconds it spent on them (read by this
 tool's own `session.codegen_stats`, so both arms use the same probe): a
 generated-code cache that thrashes shows as compiles on every rep, which
-calib does not see.
+calib does not see.  Beside them it records the CPU seconds of the timed
+reps: the Python driver process plus the JVM (utime + stime from
+/proc/<jvm pid>/stat), the cross-round companion of wall time on a host
+whose speed drifts.
 
 Alternating arm order cancels linear host drift; cold JVMs per
 measurement remove cross-arm JIT/shuffle-cache contamination.  This is
@@ -59,8 +62,9 @@ warm_dir = "/root/testdata/sf0.001"
 if os.path.isdir(warm_dir) and warm_dir != sf_dir:
     try:
         fn(spark, warm_dir).count()
-    except Exception:
-        pass
+    except Exception as e:
+        print(f"warm run of {name} at {warm_dir} failed: {e!r}",
+              file=sys.stderr)
 for df in views(spark, sf_dir).values():
     df.count()
 # single-thread calib probe (same probe as bench.py)
@@ -70,18 +74,31 @@ for _ in range(3):
     spark.range(0, 64_000_000, 1, 32).selectExpr(
         "sum(id * 2654435761 % 1000003) AS s").collect()
     cal.append(time.perf_counter() - t0)
+jvm_stat = f"/proc/{spark._jvm.java.lang.ProcessHandle.current().pid()}/stat"
+def cpu_s():  # this Python process plus the JVM (utime + stime)
+    with open(jvm_stat) as f:
+        fields = f.read().rpartition(")")[2].split()
+    return (time.process_time()
+            + (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK"))
 fn(spark, sf_dir).count()  # untimed warm run of the exact plan
 runs = []
 n0, s0 = _probe.codegen_stats(spark)
+c0 = cpu_s()
 for _ in range(reps):
     t0 = time.perf_counter()
     fn(spark, sf_dir).count()
     runs.append(round(time.perf_counter() - t0, 3))
+c1 = cpu_s()
 n1, s1 = _probe.codegen_stats(spark)
 print("ABRESULT " + json.dumps(
     {"best": min(runs), "runs": runs, "calib": round(min(cal), 3),
-     "compiles": n1 - n0, "compile_s": round(s1 - s0, 3)}))
+     "compiles": n1 - n0, "compile_s": round(s1 - s0, 3),
+     "cpu_s": round(c1 - c0, 3)}))
 """
+
+
+# what each arm's measurement records, per round
+_RECORDED = ("best", "calib", "compiles", "compile_s", "cpu_s")
 
 
 def _measure(repo: str, name: str, sf_dir: str, reps: int) -> dict:
@@ -91,6 +108,9 @@ def _measure(repo: str, name: str, sf_dir: str, reps: int) -> dict:
         capture_output=True, text=True, timeout=1800,
         env={**os.environ, "PYTHONPATH": repo},
     )
+    for line in out.stderr.splitlines():
+        if line.startswith("warm run of "):
+            print(line, file=sys.stderr, flush=True)
     for line in out.stdout.splitlines():
         if line.startswith("ABRESULT "):
             return json.loads(line[len("ABRESULT "):])
@@ -115,19 +135,19 @@ def main() -> int:
                     "reps": args.reps, "queries": {}}
     for name in args.queries:
         rec = {f"{arm}_{k}": [] for arm in "ab"
-               for k in ("best", "calib", "compiles", "compile_s")}
+               for k in _RECORDED}
         for r in range(args.rounds):
             # ABBA ordering: alternate which arm goes first each round
             order = ("a", "b") if r % 2 == 0 else ("b", "a")
             for arm in order:
                 repo = args.arm_a if arm == "a" else args.arm_b
                 m = _measure(repo, name, args.sf, args.reps)
-                for k in ("best", "calib", "compiles", "compile_s"):
+                for k in _RECORDED:
                     rec[f"{arm}_{k}"].append(m[k])
                 print(f"{name} round {r + 1} arm {arm.upper()}: "
                       f"best {m['best']}s runs {m['runs']} "
                       f"calib {m['calib']} compiles {m['compiles']} "
-                      f"({m['compile_s']}s)", flush=True)
+                      f"({m['compile_s']}s) cpu {m['cpu_s']}s", flush=True)
         rec["a_median"] = round(statistics.median(rec["a_best"]), 3)
         rec["b_median"] = round(statistics.median(rec["b_best"]), 3)
         spread_a = (min(rec["a_best"]), max(rec["a_best"]))
