@@ -70,10 +70,11 @@ def list_keys(
 
 
 def _paged(df: DataFrame, order_cols: list[str], max_rows: int) -> DataFrame:
-    """`page_sql` over a built frame, ordered by `order_cols`."""
+    """`page_sql` over a built frame, ordered by `order_cols`.  The
+    frame is built for this one page, so its view lives for the call."""
     return session.bound_sql(
         page_sql("SELECT * FROM {page}", ", ".join(order_cols)),
-        {"page": df}, max_rows=max_rows)
+        {"page": df}, once=True, max_rows=max_rows)
 
 
 def list_multipart_uploads(

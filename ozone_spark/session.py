@@ -148,15 +148,39 @@ def release(spark: SparkSession) -> list[str]:
     st.pop("bfs", None)
     st.pop("views", None)
     for name in st.pop("frame_views", {}).values():
-        spark.catalog.dropTempView(name)
+        drop_view(spark, name)
     release_frames(spark.sparkContext, frames)
     return [what for what, _ in frames]
 
 
 # temp views a session keeps over the frames its SQL templates read;
-# past this many the least recently read is dropped
+# past this many the least recently read is dropped.  Only long-lived
+# table frames are registered (single-use frames go through
+# `bound_sql(..., once=True)`), one per table the four listings read:
+# keys, directories, locations.  Measured peak of live frame views in
+# one session: 3 over a `tools/gate_check.py --all` pass at sf0.01 and
+# 3 over an `ns_interactive` benchmark run, so the bound is never
+# reached there; it only caps a session that keeps creating handles.
 FRAME_VIEWS = 64
 FRAME_VIEW_PREFIX = "ozone_spark_frame_"
+
+
+def drop_view(spark: SparkSession, name: str) -> None:
+    """Drop temp view `name` from the session's catalog and nothing
+    else.  `spark.catalog.dropTempView` would also uncache the cache
+    entry whose plan matches the view's; the CacheManager is plan-keyed
+    and shared by every session on the context, so dropping a view over
+    a persisted frame would uncache it for all of them."""
+    spark._jsparkSession.sessionState().catalog().dropTempView(name)
+
+
+def _new_view(df: DataFrame) -> str:
+    """Register `df` as a temp view under a fresh generated name."""
+    st = state(df.sparkSession)
+    seq = st["frame_view_seq"] = st.get("frame_view_seq", 0) + 1
+    name = f"{FRAME_VIEW_PREFIX}{seq}"
+    df.createOrReplaceTempView(name)
+    return name
 
 
 def frame_view(df: DataFrame) -> str:
@@ -166,30 +190,36 @@ def frame_view(df: DataFrame) -> str:
     alias it).  A query that read the view keeps its plan after the view
     is dropped: `spark.sql` resolves views when it builds the frame."""
     spark = df.sparkSession
-    st = state(spark)
-    views = st.setdefault("frame_views", OrderedDict())
+    views = state(spark).setdefault("frame_views", OrderedDict())
     name = views.get(df)
     if name is not None:
         views.move_to_end(df)
         return name
-    seq = st["frame_view_seq"] = st.get("frame_view_seq", 0) + 1
-    name = views[df] = f"{FRAME_VIEW_PREFIX}{seq}"
-    df.createOrReplaceTempView(name)
+    name = views[df] = _new_view(df)
     while len(views) > FRAME_VIEWS:
-        spark.catalog.dropTempView(views.popitem(last=False)[1])
+        drop_view(spark, views.popitem(last=False)[1])
     return name
 
 
-def bound_sql(text: str, frames: dict[str, DataFrame],
+def bound_sql(text: str, frames: dict[str, DataFrame], once: bool = False,
               **args: Any) -> DataFrame:
-    """One `spark.sql` call: `text` reads each `{name}` from the view
-    over `frames[name]` (`frame_view`) and binds `args` to its `:name`
-    markers.  Values are only ever bound, never formatted into the text,
-    so no value is parsed as SQL and the text, and with it the parse, is
-    the same for every request."""
-    views = {k: frame_view(df) for k, df in frames.items()}
+    """One `spark.sql` call: `text` reads each `{name}` from a view over
+    `frames[name]` and binds `args` to its `:name` markers.  Values are
+    only ever bound, never formatted into the text, so no value is
+    parsed as SQL and the text, and with it the parse, is the same for
+    every request.  The views are the session's `frame_view`s; with
+    `once`, for frames read by this call only, each view lives for the
+    call and the session's views are left as they were."""
     spark = next(iter(frames.values())).sparkSession
-    return spark.sql(text.format(**views), args=args)
+    if not once:
+        views = {k: frame_view(df) for k, df in frames.items()}
+        return spark.sql(text.format(**views), args=args)
+    views = {k: _new_view(df) for k, df in frames.items()}
+    try:
+        return spark.sql(text.format(**views), args=args)
+    finally:
+        for name in views.values():
+            drop_view(spark, name)
 
 
 def _ship_package(spark: SparkSession) -> None:

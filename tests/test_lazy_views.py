@@ -148,6 +148,61 @@ def test_release_unpersists_a_session_but_not_a_live_twin(tmp_path, sf_dir):
     assert lines["EMPTY"] == "True"
 
 
+_FRAME_VIEWS = r"""
+import sys
+from ozone_spark import registry, session
+from ozone_spark.operators import listing
+from ozone_spark.session import get_spark
+
+sf_dir = sys.argv[1]
+base = get_spark("frame_views", cpus=1)
+a, b = base.newSession(), base.newSession()
+va, vb = registry.views(a, sf_dir), registry.views(b, sf_dir)
+keys = va["keys"]
+keys.count()
+vb["keys"].count()
+
+
+def cached(df):
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return df.storageLevel.useMemory and "InMemoryRelation" in plan
+
+
+def temp_views(s):
+    return [t.name for t in s.catalog.listTables() if t.isTemporary]
+
+
+listing.list_keys(keys, "/vol0/", "", 5).collect()
+for i in range(session.FRAME_VIEWS):     # evicts the view over keys
+    session.frame_view(a.range(i))
+print("EVICTED", len(temp_views(a)), cached(keys))
+n_b = len(temp_views(b))
+listing._paged(vb["keys"], ["db_key"], 5).collect()
+print("PAGED", len(temp_views(b)) - n_b, cached(vb["keys"]))
+listing.list_keys(keys, "/vol0/", "", 5).collect()
+session.release(a)
+print("RELEASED", temp_views(a), cached(vb["keys"]))
+base.stop()
+"""
+
+
+def test_dropping_a_frame_view_keeps_its_frame_cached(tmp_path, sf_dir):
+    """A frame view over a persisted resident view is dropped by LRU
+    eviction and by `session.release`; neither uncaches the frame, and a
+    live twin session's entry survives A's release.  A single-use page
+    frame registers no lasting view."""
+    env = {**os.environ, "PYTHONPATH": REPO, "SPARK_DRIVER_MEMORY": "1g"}
+    out = subprocess.run([sys.executable, "-c", _FRAME_VIEWS, sf_dir],
+                         cwd=tmp_path, env=env, capture_output=True,
+                         text=True, timeout=300)
+    lines = dict(ln.split(" ", 1) for ln in out.stdout.splitlines()
+                 if ln.split(" ", 1)[0] in ("EVICTED", "PAGED", "RELEASED"))
+    assert lines.get("EVICTED") == f"{session.FRAME_VIEWS} True", \
+        out.stderr[-2000:]
+    assert lines["PAGED"] == "0 True"
+    assert lines["RELEASED"] == "[] True"
+
+
 def test_view_maps_are_per_session_and_released_with_it(spark, sf_dir):
     mine = registry.views(spark, sf_dir)
     other = spark.newSession()
