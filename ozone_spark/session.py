@@ -259,6 +259,18 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
 # generated classes the JVM keeps compiled (see get_spark)
 CODEGEN_CACHE_ENTRIES = 2000
 
+# the engine's `file://` Hadoop filesystem (sources in jvm/src, built by
+# tools/build_jvm.py): Hadoop's local filesystem, checksums included,
+# with file modes set in-process.  Without Hadoop's native library the
+# stock one forks `chmod` for every file, `.crc` and directory a write
+# creates: 68 forks of 3-9 ms each in one CDC drain (BENCH_NOTES.md).
+FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm",
+                      "ozone-spark-fs.jar")
+LOCAL_FS_CONFS = {
+    "fs.file.impl": "ozonespark.fs.NioLocalFileSystem",
+    "fs.AbstractFileSystem.file.impl": "ozonespark.fs.NioLocalFs",
+}
+
 
 def codegen_stats(spark: SparkSession) -> tuple[int, float]:
     """(classes compiled, seconds spent compiling them) by the JVM's
@@ -273,7 +285,27 @@ def codegen_stats(spark: SparkSession) -> tuple[int, float]:
     return int(n), ns / 1e9
 
 
+def _local_fs_confs(builder: SparkSession.Builder) -> SparkSession.Builder:
+    """Bind `file://` to the engine's filesystem (LOCAL_FS_CONFS).  A
+    JVM this call launches gets FS_JAR on its classpath; a running JVM
+    gets the confs only if it can load the class, so one launched
+    elsewhere keeps Hadoop's stock filesystem."""
+    if SparkContext._gateway is None:
+        builder = builder.config("spark.driver.extraClassPath", FS_JAR)
+    elif not SparkContext._jvm.org.apache.spark.util.Utils.classIsLoadable(
+            LOCAL_FS_CONFS["fs.file.impl"]):
+        return builder
+    for k, v in LOCAL_FS_CONFS.items():
+        builder = builder.config(f"spark.hadoop.{k}", v)
+    return builder
+
+
 def get_spark(app_name: str = "ozone-spark", cpus: int | None = None) -> SparkSession:
+    """The engine's session: `local[cpus]`, the RUNTIME_CONFS, a
+    generated-code cache sized for the serving mix, and `file://` bound
+    to the engine's in-process-chmod filesystem (`_local_fs_confs`; only
+    where the JVM can load it).  An existing session is returned with
+    the runtime confs applied."""
     # driver.memory stays a MODEST 8g by MEASUREMENT, not oversight: an
     # A/B at the 30x probe corpus (idle host, same query order) ran the
     # cluster-machinery sequence at 90/41/23 s with 8g but 117/91/38 s
@@ -296,7 +328,7 @@ def get_spark(app_name: str = "ozone-spark", cpus: int | None = None) -> SparkSe
     )
     for k, v in runtime_confs().items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = _local_fs_confs(builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return apply_runtime_confs(spark)
 

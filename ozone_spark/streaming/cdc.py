@@ -28,16 +28,37 @@ Trigger.AvailableNow full rebuild.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql.types import (
+    ArrayType, IntegerType, LongType, StringType, StructField, StructType,
+)
 
 from ozone_spark.functions.bins import FILE_BIN_BASE_EXP, FILE_BIN_MAX_IDX, size_bin_index
 
 CDC_COLUMNS = ["seq", "op", "db_key", "volume", "bucket", "key_name",
                "object_id", "data_size", "replicated_size", "event_time"]
+
+# the log's declared schema, so no reader infers it with a job.  `seq`
+# is long: Spark reads the INT32 `seq` synthesize_cdc_log writes as
+# long, but a long column cannot be read as int.
+CDC_SCHEMA = StructType([
+    StructField(c, LongType() if c in (
+        "seq", "object_id", "data_size", "replicated_size", "event_time")
+        else StringType())
+    for c in CDC_COLUMNS])
+
+# the per-event block-location payload (synthesize_cdc_log(...,
+# locations=...)); only the container-index drain declares it
+BLOCK_LOCATIONS = StructField("block_locations", ArrayType(StructType([
+    StructField("block_seq", IntegerType()),
+    StructField("container_id", LongType()),
+    StructField("block_len", LongType()),
+])))
 
 
 def synthesize_cdc_log(keys: DataFrame, deleted_object_ids: DataFrame,
@@ -108,10 +129,16 @@ def synthesize_cdc_log(keys: DataFrame, deleted_object_ids: DataFrame,
 
 
 def read_cdc_stream(spark: SparkSession, cdc_dir: str,
-                    max_files_per_trigger: int = 1) -> DataFrame:
+                    max_files_per_trigger: int = 1,
+                    with_locations: bool = False) -> DataFrame:
     """ST1: the change-log streaming source; file-source offsets play the
-    role of the WAL sequence checkpoint."""
-    schema = spark.read.parquet(cdc_dir).schema
+    role of the WAL sequence checkpoint.  It reads with the declared
+    CDC_SCHEMA (plus BLOCK_LOCATIONS `with_locations`), so building the
+    stream runs no schema-inference job; the `chunk` partition column
+    is still found from the directory names."""
+    schema = CDC_SCHEMA
+    if with_locations:
+        schema = StructType(schema.fields + [BLOCK_LOCATIONS])
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -155,6 +182,11 @@ class IncrementalViewStore:
     the parquet reader) and a later merge with an id at or below it is
     skipped: a batch the stream replays after a failure before its
     commit is folded once.  The id is written after the bucket swap.
+
+    A fold also writes its schema to `_schema.json`, hidden the same
+    way, and `current()` and the fold's read-back read the store with
+    it, so no read of the store runs a schema-inference job.  A store
+    without the file (written before it existed) is read by inference.
     """
 
     def __init__(self, spark: SparkSession, path: str, group_cols: list[str],
@@ -165,6 +197,7 @@ class IncrementalViewStore:
         self.measure_cols = measure_cols
         self.n_buckets = n_buckets
         self._batch_marker = os.path.join(path, "_last_batch_id")
+        self._schema_file = os.path.join(path, "_schema.json")
 
     def _bucket_expr(self) -> F.Column:
         return F.pmod(F.xxhash64(*self.group_cols), F.lit(self.n_buckets))
@@ -173,10 +206,19 @@ class IncrementalViewStore:
         return os.path.exists(self.path) and any(
             e.startswith("view_bucket=") for e in os.listdir(self.path))
 
+    def _read(self) -> DataFrame:
+        """The stored view, `view_bucket` included (found from the
+        directory names)."""
+        reader = self.spark.read
+        if os.path.exists(self._schema_file):
+            with open(self._schema_file) as f:
+                reader = reader.schema(StructType.fromJson(json.load(f)))
+        return reader.parquet(self.path)
+
     def current(self) -> DataFrame | None:
         if not self._has_data():
             return None
-        return self.spark.read.parquet(self.path).drop("view_bucket")
+        return self._read().drop("view_bucket")
 
     def last_batch_id(self) -> int:
         """The id of the last micro-batch merged, or -1."""
@@ -199,11 +241,7 @@ class IncrementalViewStore:
             # which buckets the delta touched, so no pass collects them
             self._fold_buckets(delta, None)
         if batch_id is not None:
-            os.makedirs(self.path, exist_ok=True)
-            tmp = self._batch_marker + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(str(batch_id))
-            os.replace(tmp, self._batch_marker)
+            _write_atomic(self._batch_marker, str(batch_id))
 
     def _fold_buckets(self, delta: DataFrame, touched: list[int] | None) -> None:
         """Fold `delta` into the store and swap in the `touched` buckets;
@@ -211,7 +249,7 @@ class IncrementalViewStore:
         merged = delta
         if touched is not None:
             # partition-pruned read: untouched buckets are never scanned
-            merged = (self.spark.read.parquet(self.path)
+            merged = (self._read()
                       .where(F.col("view_bucket").isin(touched))
                       .unionByName(delta))
         folded = (
@@ -233,11 +271,23 @@ class IncrementalViewStore:
             if os.path.exists(src):  # bucket may have folded to empty
                 shutil.move(src, dst)
         shutil.rmtree(tmp, ignore_errors=True)
+        _write_atomic(self._schema_file,
+                      folded.drop("view_bucket").schema.json())
+
+
+def _write_atomic(path: str, text: str) -> None:
+    """Write `text` to `path` through a rename, so a reader sees the
+    old file or the new one."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
 
 
 def run_incremental_view(spark: SparkSession, cdc_dir: str,
                          store: IncrementalViewStore, checkpoint_dir: str,
-                         delta_fn) -> None:
+                         delta_fn, with_locations: bool = False) -> None:
     """ST2-ST5 wired together: stream the CDC log (AvailableNow drains
     the backlog like Recon's catch-up), fold each micro-batch through
     `delta_fn` into the view store — the generic ReconOmTask.process()
@@ -247,7 +297,7 @@ def run_incremental_view(spark: SparkSession, cdc_dir: str,
         store.merge(delta_fn(batch_df), batch_id)
 
     q = (
-        read_cdc_stream(spark, cdc_dir)
+        read_cdc_stream(spark, cdc_dir, with_locations=with_locations)
         .writeStream.foreachBatch(on_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -337,6 +387,8 @@ def run_incremental_container_index(spark: SparkSession, cdc_dir: str,
         ["block_count", "total_bytes"])
 
     if locations is None:
+        _require_locations(cdc_dir)
+
         def index_delta(batch_df: DataFrame) -> DataFrame:
             sign = F.when(F.col("op") == "PUT", F.lit(1)).otherwise(F.lit(-1))
             return (
@@ -361,7 +413,27 @@ def run_incremental_container_index(spark: SparkSession, cdc_dir: str,
                      .alias("total_bytes"))
             )
 
-    run_incremental_view(spark, cdc_dir, store, checkpoint_dir, index_delta)
+    run_incremental_view(spark, cdc_dir, store, checkpoint_dir, index_delta,
+                         with_locations=locations is None)
+
+
+def _require_locations(cdc_dir: str) -> None:
+    """Raise unless every log file under `cdc_dir` has a
+    `block_locations` column.  The declared schema reads a missing
+    column as NULL, which would fold to an empty index; the files'
+    footers (read on the driver, no Spark job) tell the two apart."""
+    import pyarrow.parquet as pq
+
+    for d, _, files in os.walk(cdc_dir):
+        for f in files:
+            path = os.path.join(d, f)
+            if (f.startswith((".", "_")) or not f.endswith(".parquet")
+                    or BLOCK_LOCATIONS.name in pq.read_schema(path).names):
+                continue
+            raise ValueError(
+                f"CDC log file {path} has no {BLOCK_LOCATIONS.name} column: "
+                "write the log with synthesize_cdc_log(..., locations=...) "
+                "or pass a locations table")
 
 
 def task_status(spark: SparkSession,
@@ -426,8 +498,9 @@ def process_or_reprocess(spark: SparkSession, cdc_dir: str,
     is exactly what the gate query materializes by running both.
 
     The capacity probe is a metadata-cheap count of the pending log
-    (file-source offset arithmetic at real scale, not a data scan)."""
-    pending = spark.read.parquet(cdc_dir).count()
+    (file-source offset arithmetic at real scale, not a data scan),
+    read with the declared CDC_SCHEMA: no schema-inference job."""
+    pending = spark.read.schema(CDC_SCHEMA).parquet(cdc_dir).count()
     if pending > capacity:
         return reprocess_histogram(keys_now) \
             .withColumn("path", F.lit("reprocess"))

@@ -617,3 +617,37 @@ def test_streaming_ingest_dedup_recovering_equals_batch(spark, sf_dir, tmpdir):
         corpus, ingest, max_bucket=5, recover_saturated=3)
     assert sorted(tuple(r) for r in got.collect()) == \
         sorted(tuple(r) for r in want.collect())
+
+
+def test_cdc_reads_run_no_schema_job(spark, sf_dir, tmpdir):
+    """The CDC stream and the view store read with schemas the engine
+    declares or wrote, so building either runs no Spark job (schema
+    inference would run one each)."""
+    t = tables.namespace_views(spark, sf_dir)
+    cdc.synthesize_cdc_log(t["keys"], t["deleted_keys"], f"{tmpdir}/cdc",
+                           n_chunks=2)
+    assert count_jobs(spark, "ozs-cdc-stream",
+                      lambda: cdc.read_cdc_stream(spark, f"{tmpdir}/cdc")) == 0
+    stream = cdc.read_cdc_stream(spark, f"{tmpdir}/cdc")
+    assert stream.columns == cdc.CDC_COLUMNS + ["chunk"]
+    assert stream.schema["seq"].dataType.simpleString() == "bigint"
+
+    store = cdc.IncrementalViewStore(spark, f"{tmpdir}/store", ["k"], ["v"])
+    store.merge(spark.createDataFrame([("a", 1), ("b", 2)],
+                                      "k string, v long"), 0)
+    assert count_jobs(spark, "ozs-view-current", store.current) == 0
+    cur = store.current()
+    assert cur.schema.simpleString() == "struct<k:string,v:bigint>"
+    assert {r.k: r.v for r in cur.collect()} == {"a": 1, "b": 2}
+
+
+def test_container_index_needs_block_locations(spark, sf_dir, tmpdir):
+    """The payload-carrying container-index drain declares
+    `block_locations`; a log written without it fails the drain rather
+    than folding its NULLs into an empty index."""
+    t = tables.namespace_views(spark, sf_dir)
+    cdc.synthesize_cdc_log(t["keys"], t["deleted_keys"], f"{tmpdir}/cdc",
+                           n_chunks=2)
+    with pytest.raises(Exception, match="block_locations"):
+        cdc.run_incremental_container_index(
+            spark, f"{tmpdir}/cdc", None, f"{tmpdir}/store", f"{tmpdir}/ck")
