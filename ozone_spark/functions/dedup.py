@@ -177,11 +177,11 @@ def _slots(spark: SparkSession | None) -> dict[str, _Slot]:
 
 def slot_stats(slot: str | None = None) -> dict[str, tuple[int, int]]:
     """(hits, misses) per cache slot of the active session — misses
-    include first-touch."""
+    include first-touch.  A slot the session never used is absent, so
+    `slot_stats("unknown")` is `{}`, not an idle `(0, 0)`."""
     slots = _slots(SparkSession.getActiveSession())
-    items = slots.items() if slot is None else \
-        [(slot, slots.get(slot, _Slot()))]
-    return {s: (c.hits, c.misses) for s, c in items}
+    return {s: (c.hits, c.misses) for s, c in slots.items()
+            if slot is None or s == slot}
 
 
 def _slot_cache(df: DataFrame, slot: str) -> DataFrame:

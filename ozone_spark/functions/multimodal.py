@@ -2,11 +2,18 @@
 
 Images/audio/video are opaque `binary` payloads with typed metadata.
 The Spark-side plumbing — schema, batching, partitioning, Pandas-UDF
-signatures over mapInPandas — is real and tested.  THREE formats decode
-for real in pure numpy + stdlib (P6 PPM, 24-bit BMP, 8-bit truecolor
-deflate PNG); codec-library formats (JPEG, audio, video) remain STUBBED
-(the container ships no codec libs): decode raises NotImplementedError
+signatures over mapInPandas — is real and tested.  FOUR image formats
+decode for real in pure numpy + stdlib (P6 PPM, 24-bit BMP, 8-bit
+truecolor deflate PNG, baseline sequential JPEG); audio and video remain
+STUBBED (they need codec libraries): decode raises NotImplementedError
 unless the deterministic fake decoder is requested.
+
+Each format is one (encode, decode) pair from a factory, served by one
+media-table kernel (`_media_table`) and one channel-feature kernel
+(`_channel_features`).  Every function a mapInPandas closure captures is
+local to a factory or to its caller: such functions pickle BY VALUE
+(their qualname is not importable), so Python workers need no
+ozone_spark on their path.
 
 At scale, payloads stay in executor-side Arrow batches end-to-end;
 feature extraction is an Arrow-vectorized mapInPandas, never a
@@ -25,7 +32,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .dedup import _spread
+from .dedup import _slot_cache, _spread
 
 MEDIA_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -95,113 +102,7 @@ def decode_media(payload: bytes, media_type: str, fake: bool = False):
         "test decoder")
 
 
-# --------------------------------------------------- real PPM (P6) codec
-
-PPM_WIDTH = 16          # fixed raster width for doc-derived images
-PPM_BYTES_PER_ROW = PPM_WIDTH * 3
-
-
-def encode_ppm(width: int, height: int, flat_rgb) -> bytes:
-    """Spec-compliant binary PPM (P6) encoder: ASCII header
-    `P6\\n<w> <h>\\n255\\n` followed by the w*h*3 raster bytes.  Any
-    netpbm-capable viewer/library decodes the output."""
-    import numpy as _np
-    data = _np.asarray(flat_rgb, dtype=_np.uint8)
-    if data.size != width * height * 3:
-        raise ValueError(
-            f"raster size {data.size} != {width}x{height}x3")
-    return b"P6\n%d %d\n255\n" % (width, height) + data.tobytes()
-
-
-def decode_ppm(payload: bytes):
-    """REAL pure-numpy P6 decoder (no codec libs): parses the netpbm
-    header — magic, `#` comments to end-of-line, whitespace-separated
-    width/height/maxval, the single whitespace byte before the raster —
-    and returns (width, height, ndarray[h, w, 3] of uint8).  Raises
-    ValueError on a wrong magic, non-255 maxval, malformed header or
-    truncated raster; reference semantics: the netpbm P6 format spec
-    (public), same header grammar GIMP/ImageMagick parse."""
-    import numpy as _np
-    if payload[:2] != b"P6":
-        raise ValueError("not a binary PPM (P6 magic missing)")
-    i, tokens = 2, []
-    while len(tokens) < 3:
-        while i < len(payload) and payload[i:i + 1].isspace():
-            i += 1
-        if i < len(payload) and payload[i:i + 1] == b"#":
-            nl = payload.find(b"\n", i)
-            i = nl + 1 if nl >= 0 else len(payload)
-            continue
-        j = i
-        while j < len(payload) and not payload[j:j + 1].isspace():
-            j += 1
-        if j == i:
-            raise ValueError("truncated PPM header")
-        try:
-            tokens.append(int(payload[i:j]))
-        except ValueError as ex:
-            raise ValueError(f"bad PPM header token {payload[i:j]!r}") from ex
-        i = j
-    i += 1  # exactly one whitespace byte separates maxval from raster
-    width, height, maxval = tokens
-    if maxval != 255:
-        raise ValueError(f"only maxval 255 supported, got {maxval}")
-    if width <= 0 or height <= 0:
-        raise ValueError(f"bad dimensions {width}x{height}")
-    n = width * height * 3
-    data = _np.frombuffer(payload, dtype=_np.uint8, count=-1, offset=i)
-    if data.size < n:
-        raise ValueError(
-            f"truncated raster: {data.size} bytes for {width}x{height}")
-    return width, height, data[:n].reshape(height, width, 3)
-
-
-def ppm_media_table(docs: DataFrame, width: int = PPM_WIDTH) -> DataFrame:
-    """REAL image payloads: one genuine P6 PPM per document, sized by
-    the doc's n_chars (height = ceil(n_chars / (width*3)), min 1) with
-    the deterministic pixel pattern flat[i] = (doc_id + i) % 256 — a
-    spec-compliant file any netpbm reader decodes, whose channel sums
-    an external engine can replay from (doc_id, n_chars) alone.
-    Arrow-batched mapInPandas; payload bytes are built vectorized
-    (arange + mod, no per-byte Python)."""
-    w = width
-    out_cols = [f.name for f in MEDIA_SCHEMA]
-
-    # NOTE: self-contained closure (locals + builtins only) — see
-    # extract_features.
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in it:
-            payloads, lens = [], []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                h = max(1, (int(n_chars) + w * 3 - 1) // (w * 3))
-                n = w * h * 3
-                flat = (_np.arange(n, dtype=_np.int64) + int(doc_id)) % 256
-                p = (b"P6\n%d %d\n255\n" % (w, h)
-                     + flat.astype(_np.uint8).tobytes())
-                payloads.append(p)
-                lens.append(len(p))
-            yield _pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "media_type": ["image"] * len(payloads),
-                "payload": payloads,
-                "payload_len": _np.asarray(lens, dtype=_np.int64),
-            }, columns=out_cols)
-
-    # Slot-cached (r11 optimization round): the encoded payload table
-    # is FIXTURE SYNTHESIS — in production the media bytes are the
-    # stored input, not re-encoded per query — so repeated queries over
-    # the same docs probe one resident copy instead of re-running the
-    # Python encode pass per invocation (plan-keyed sameSemantics
-    # reuse; a different docs plan still evicts and rebuilds).
-    from .dedup import _slot_cache
-    return _slot_cache(
-        _spread(docs.select("doc_id", "n_chars"))
-        .mapInPandas(batches, schema=MEDIA_SCHEMA),
-        f"media_tbl_{batches.__qualname__.split('.')[0]}_{w}")
-
+# ------------------------------------------------------------ kernels
 
 PPM_FEATURE_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -214,206 +115,29 @@ PPM_FEATURE_SCHEMA = StructType([
 ])
 
 
-def ppm_features(media: DataFrame) -> DataFrame:
-    """Per-image channel statistics through the REAL P6 decoder: every
-    payload is parsed by decode_ppm (magic, header grammar, raster
-    length validation) and reduced to exact integer per-channel sums —
-    no fake decode anywhere on this path.  Output is all-BIGINT, so an
-    external engine can verify it by replaying the encoder's pixel
-    arithmetic.
-
-    Scale shape: map-only Arrow batches (decode + channel sums are
-    numpy reductions per payload); no shuffle until the caller
-    aggregates."""
-    out_cols = [f.name for f in PPM_FEATURE_SCHEMA]
-
-    # NOTE: self-contained closure — decode_ppm's body is inlined-free
-    # here via module-level import at worker side being unavailable, so
-    # the parser below is the same algorithm; keep the two in sync (the
-    # round-trip pytest pins them together).
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        def parse(payload: bytes):
-            if payload[:2] != b"P6":
-                raise ValueError("not a binary PPM (P6 magic missing)")
-            i, tokens = 2, []
-            while len(tokens) < 3:
-                while i < len(payload) and payload[i:i + 1].isspace():
-                    i += 1
-                if i < len(payload) and payload[i:i + 1] == b"#":
-                    nl = payload.find(b"\n", i)
-                    i = nl + 1 if nl >= 0 else len(payload)
-                    continue
-                j = i
-                while j < len(payload) and not payload[j:j + 1].isspace():
-                    j += 1
-                if j == i:
-                    raise ValueError("truncated PPM header")
-                tokens.append(int(payload[i:j]))
-                i = j
-            i += 1
-            w, h, maxval = tokens
-            if maxval != 255:
-                raise ValueError(f"only maxval 255 supported, got {maxval}")
-            n = w * h * 3
-            data = _np.frombuffer(payload, dtype=_np.uint8, count=-1,
-                                  offset=i)
-            if data.size < n:
-                raise ValueError("truncated raster")
-            return w, h, data[:n].reshape(h, w, 3)
-
-        for pdf in it:
-            rows = {c: [] for c in out_cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, arr = parse(bytes(payload))
-                sums = arr.reshape(-1, 3).sum(axis=0, dtype=_np.int64)
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixels"].append(w * h)
-                rows["sum_r"].append(int(sums[0]))
-                rows["sum_g"].append(int(sums[1]))
-                rows["sum_b"].append(int(sums[2]))
-            yield _pd.DataFrame(rows, columns=out_cols)
-
-    return media.mapInPandas(batches, schema=PPM_FEATURE_SCHEMA)
-
-
-# ------------------------------------------- real BMP (24-bit) codec
-
-BMP_WIDTH = 15          # odd*3 row bytes => non-zero row padding is
-                        # exercised on every payload (unlike width 16)
-
-
-def encode_bmp(width: int, height: int, flat_rgb) -> bytes:
-    """Spec-compliant uncompressed 24-bit BMP encoder (BITMAPINFOHEADER):
-    14-byte file header + 40-byte info header + BOTTOM-UP rows of BGR
-    pixels each padded to a 4-byte boundary — the layout every image
-    viewer since Windows 3.x decodes.  `flat_rgb` is the raster in
-    natural RGB top-down order (same convention as encode_ppm)."""
-    import numpy as _np
-    data = _np.asarray(flat_rgb, dtype=_np.uint8)
-    if data.size != width * height * 3:
-        raise ValueError(
-            f"raster size {data.size} != {width}x{height}x3")
-    rows = data.reshape(height, width, 3)[:, :, ::-1]  # RGB -> BGR
-    pad = (-width * 3) % 4
-    stride = width * 3 + pad
-    body = _np.zeros((height, stride), dtype=_np.uint8)
-    body[:, :width * 3] = rows.reshape(height, width * 3)
-    pixels = body[::-1].tobytes()                      # bottom-up rows
-    offset = 14 + 40
-    size = offset + len(pixels)
-    hdr = (b"BM" + size.to_bytes(4, "little") + b"\x00\x00\x00\x00"
-           + offset.to_bytes(4, "little")
-           + (40).to_bytes(4, "little")
-           + width.to_bytes(4, "little")
-           + height.to_bytes(4, "little", signed=True)
-           + (1).to_bytes(2, "little")                 # planes
-           + (24).to_bytes(2, "little")                # bpp
-           + (0).to_bytes(4, "little")                 # BI_RGB
-           + len(pixels).to_bytes(4, "little")
-           + (2835).to_bytes(4, "little") * 2          # 72 DPI
-           + (0).to_bytes(4, "little") * 2)
-    return hdr + pixels
-
-
-def decode_bmp(payload: bytes):
-    """REAL pure-numpy 24-bit BMP decoder (no codec libs): validates the
-    'BM' magic, reads the pixel-data offset, requires BITMAPINFOHEADER
-    (or larger) with planes=1, bpp=24, compression=BI_RGB, strips the
-    per-row 4-byte padding, flips bottom-up rows (negative height =
-    top-down, also per spec), converts BGR back to RGB and returns
-    (width, height, ndarray[h, w, 3] of uint8).  Raises ValueError on
-    malformed headers or a truncated pixel array; reference semantics:
-    the public Windows BITMAPFILEHEADER/BITMAPINFOHEADER layout."""
-    import numpy as _np
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP ('BM' magic missing)")
-    if len(payload) < 54:
-        raise ValueError("truncated BMP header")
-    offset = int.from_bytes(payload[10:14], "little")
-    hdr_size = int.from_bytes(payload[14:18], "little")
-    if hdr_size < 40:
-        raise ValueError(f"unsupported DIB header size {hdr_size}")
-    width = int.from_bytes(payload[18:22], "little", signed=True)
-    height = int.from_bytes(payload[22:26], "little", signed=True)
-    planes = int.from_bytes(payload[26:28], "little")
-    bpp = int.from_bytes(payload[28:30], "little")
-    compression = int.from_bytes(payload[30:34], "little")
-    if planes != 1 or bpp != 24 or compression != 0:
-        raise ValueError(
-            f"only uncompressed 24-bit BMP supported "
-            f"(planes={planes}, bpp={bpp}, compression={compression})")
-    top_down = height < 0
-    height = abs(height)
-    if width <= 0 or height == 0:
-        raise ValueError(f"bad dimensions {width}x{height}")
-    stride = (width * 3 + 3) & ~3
-    n = stride * height
-    data = _np.frombuffer(payload, dtype=_np.uint8, count=-1, offset=offset)
-    if data.size < n:
-        raise ValueError(
-            f"truncated pixel array: {data.size} bytes for "
-            f"{width}x{height} (stride {stride})")
-    rows = data[:n].reshape(height, stride)[:, :width * 3]
-    if not top_down:
-        rows = rows[::-1]
-    return width, height, rows.reshape(height, width, 3)[:, :, ::-1]
-
-
-def bmp_media_table(docs: DataFrame, width: int = BMP_WIDTH) -> DataFrame:
-    """REAL image payloads, BMP flavor: one genuine uncompressed 24-bit
-    BMP per document, sized by n_chars (height = ceil(n_chars /
-    (width*3)), min 1) with the SAME deterministic pixel pattern as
-    ppm_media_table — flat_rgb[i] = (doc_id + i) % 256 in top-down RGB
-    order — so an external engine replays channel sums from (doc_id,
-    n_chars) alone, while the bytes on the wire exercise the BGR /
-    bottom-up / row-padding layout the PPM path never touches.
-    Arrow-batched mapInPandas; rasters built vectorized."""
-    w = width
+def _media_table(docs: DataFrame, name: str, width: int, raster,
+                 encode) -> DataFrame:
+    """One real image payload per document: `raster(doc_id, n_chars,
+    width)` returns (height, flat RGB raster), so an external engine
+    replays the pixels from (doc_id, n_chars) alone, and `encode(width,
+    height, flat)` returns the file bytes.  Arrow-batched mapInPandas."""
     out_cols = [f.name for f in MEDIA_SCHEMA]
 
-    # NOTE: self-contained closure (locals + builtins only) — see
-    # extract_features.
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as _np
         import pandas as _pd
 
-        pad = (-w * 3) % 4
-        stride = w * 3 + pad
-        offset = 54
-        hdr_tail = ((40).to_bytes(4, "little")
-                    + w.to_bytes(4, "little"))
         for pdf in it:
-            payloads, lens = [], []
+            payloads = []
             for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                h = max(1, (int(n_chars) + w * 3 - 1) // (w * 3))
-                flat = ((_np.arange(w * h * 3, dtype=_np.int64)
-                         + int(doc_id)) % 256).astype(_np.uint8)
-                body = _np.zeros((h, stride), dtype=_np.uint8)
-                body[:, :w * 3] = flat.reshape(h, w, 3)[:, :, ::-1] \
-                    .reshape(h, w * 3)
-                pixels = body[::-1].tobytes()
-                size = offset + len(pixels)
-                p = (b"BM" + size.to_bytes(4, "little")
-                     + b"\x00\x00\x00\x00" + offset.to_bytes(4, "little")
-                     + hdr_tail + h.to_bytes(4, "little", signed=True)
-                     + (1).to_bytes(2, "little") + (24).to_bytes(2, "little")
-                     + (0).to_bytes(4, "little")
-                     + len(pixels).to_bytes(4, "little")
-                     + (2835).to_bytes(4, "little") * 2
-                     + (0).to_bytes(4, "little") * 2
-                     + pixels)
-                payloads.append(p)
-                lens.append(len(p))
+                h, flat = raster(int(doc_id), int(n_chars), width)
+                payloads.append(encode(width, h, flat))
             yield _pd.DataFrame({
                 "doc_id": pdf["doc_id"].to_numpy(),
                 "media_type": ["image"] * len(payloads),
                 "payload": payloads,
-                "payload_len": _np.asarray(lens, dtype=_np.int64),
+                "payload_len": _np.asarray([len(p) for p in payloads],
+                                           dtype=_np.int64),
             }, columns=out_cols)
 
     # Slot-cached (r11 optimization round): the encoded payload table
@@ -422,73 +146,244 @@ def bmp_media_table(docs: DataFrame, width: int = BMP_WIDTH) -> DataFrame:
     # the same docs probe one resident copy instead of re-running the
     # Python encode pass per invocation (plan-keyed sameSemantics
     # reuse; a different docs plan still evicts and rebuilds).
-    from .dedup import _slot_cache
     return _slot_cache(
         _spread(docs.select("doc_id", "n_chars"))
         .mapInPandas(batches, schema=MEDIA_SCHEMA),
-        f"media_tbl_{batches.__qualname__.split('.')[0]}_{w}")
+        f"media_tbl_{name}_{width}")
 
 
-def bmp_features(media: DataFrame) -> DataFrame:
-    """Per-image channel statistics through the REAL BMP decoder: every
-    payload is parsed by the full header/stride/bottom-up/BGR logic and
-    reduced to exact integer per-channel RGB sums (same output schema
-    as ppm_features).  Scale shape: map-only Arrow batches; no shuffle
+def _channel_features(media: DataFrame, decode) -> DataFrame:
+    """Per-image channel statistics through a real decoder: every
+    payload is parsed by `decode` (with all of its validation) and
+    reduced to exact integer per-channel RGB sums.  Output is
+    all-BIGINT, so an external engine can verify it by replaying the
+    raster arithmetic.  Scale shape: map-only Arrow batches; no shuffle
     until the caller aggregates."""
     out_cols = [f.name for f in PPM_FEATURE_SCHEMA]
 
-    # NOTE: self-contained closure — same algorithm as decode_bmp;
-    # the round-trip pytest pins the two together.
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as _np
         import pandas as _pd
 
-        def parse(payload: bytes):
-            if payload[:2] != b"BM":
-                raise ValueError("not a BMP ('BM' magic missing)")
-            if len(payload) < 54:
-                raise ValueError("truncated BMP header")
-            offset = int.from_bytes(payload[10:14], "little")
-            hdr_size = int.from_bytes(payload[14:18], "little")
-            if hdr_size < 40:
-                raise ValueError(f"unsupported DIB header {hdr_size}")
-            w = int.from_bytes(payload[18:22], "little", signed=True)
-            h = int.from_bytes(payload[22:26], "little", signed=True)
-            planes = int.from_bytes(payload[26:28], "little")
-            bpp = int.from_bytes(payload[28:30], "little")
-            comp = int.from_bytes(payload[30:34], "little")
-            if planes != 1 or bpp != 24 or comp != 0:
-                raise ValueError("only uncompressed 24-bit BMP supported")
-            top_down = h < 0
-            h = abs(h)
-            if w <= 0 or h == 0:
-                raise ValueError(f"bad dimensions {w}x{h}")
-            stride = (w * 3 + 3) & ~3
-            n = stride * h
-            data = _np.frombuffer(payload, dtype=_np.uint8, count=-1,
-                                  offset=offset)
-            if data.size < n:
-                raise ValueError("truncated pixel array")
-            rows = data[:n].reshape(h, stride)[:, :w * 3]
-            if not top_down:
-                rows = rows[::-1]
-            return w, h, rows.reshape(h, w, 3)[:, :, ::-1]
-
         for pdf in it:
             rows = {c: [] for c in out_cols}
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, arr = parse(bytes(payload))
+                w, h, arr = decode(bytes(payload))
                 sums = arr.reshape(-1, 3).sum(axis=0, dtype=_np.int64)
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixels"].append(w * h)
-                rows["sum_r"].append(int(sums[0]))
-                rows["sum_g"].append(int(sums[1]))
-                rows["sum_b"].append(int(sums[2]))
+                for c, v in zip(out_cols,
+                                (int(doc_id), w, h, w * h, *map(int, sums))):
+                    rows[c].append(v)
             yield _pd.DataFrame(rows, columns=out_cols)
 
     return media.mapInPandas(batches, schema=PPM_FEATURE_SCHEMA)
+
+
+def _ramp(min_rows: int):
+    """Raster builder shared by PPM, BMP and PNG: flat[i] = (doc_id + i)
+    % 256 in top-down RGB order over ceil(n_chars / (width*3)) rows, at
+    least `min_rows`."""
+
+    def raster(doc_id: int, n_chars: int, width: int):
+        import numpy as _np
+        h = max(min_rows, (n_chars + width * 3 - 1) // (width * 3))
+        flat = (_np.arange(width * h * 3, dtype=_np.int64) + doc_id) % 256
+        return h, flat.astype(_np.uint8)
+
+    return raster
+
+
+# --------------------------------------------------- real PPM (P6) codec
+
+PPM_WIDTH = 16          # fixed raster width for doc-derived images
+
+
+def _ppm_impl():
+    """Factory for the P6 PPM codec pair."""
+
+    def encode_ppm(width: int, height: int, flat_rgb) -> bytes:
+        """Spec-compliant binary PPM (P6) encoder: ASCII header
+        `P6\\n<w> <h>\\n255\\n` followed by the w*h*3 raster bytes.  Any
+        netpbm-capable viewer/library decodes the output."""
+        import numpy as _np
+        data = _np.asarray(flat_rgb, dtype=_np.uint8)
+        if data.size != width * height * 3:
+            raise ValueError(
+                f"raster size {data.size} != {width}x{height}x3")
+        return b"P6\n%d %d\n255\n" % (width, height) + data.tobytes()
+
+    def decode_ppm(payload: bytes):
+        """REAL pure-numpy P6 decoder (no codec libs): parses the netpbm
+        header — magic, `#` comments to end-of-line, whitespace-separated
+        width/height/maxval, the single whitespace byte before the
+        raster — and returns (width, height, ndarray[h, w, 3] of uint8).
+        Raises ValueError on a wrong magic, non-255 maxval, malformed
+        header or truncated raster; reference semantics: the netpbm P6
+        format spec (public), same header grammar GIMP/ImageMagick
+        parse."""
+        import numpy as _np
+        if payload[:2] != b"P6":
+            raise ValueError("not a binary PPM (P6 magic missing)")
+        i, tokens = 2, []
+        while len(tokens) < 3:
+            while i < len(payload) and payload[i:i + 1].isspace():
+                i += 1
+            if i < len(payload) and payload[i:i + 1] == b"#":
+                nl = payload.find(b"\n", i)
+                i = nl + 1 if nl >= 0 else len(payload)
+                continue
+            j = i
+            while j < len(payload) and not payload[j:j + 1].isspace():
+                j += 1
+            if j == i:
+                raise ValueError("truncated PPM header")
+            try:
+                tokens.append(int(payload[i:j]))
+            except ValueError as ex:
+                raise ValueError(
+                    f"bad PPM header token {payload[i:j]!r}") from ex
+            i = j
+        i += 1  # exactly one whitespace byte separates maxval from raster
+        width, height, maxval = tokens
+        if maxval != 255:
+            raise ValueError(f"only maxval 255 supported, got {maxval}")
+        if width <= 0 or height <= 0:
+            raise ValueError(f"bad dimensions {width}x{height}")
+        n = width * height * 3
+        data = _np.frombuffer(payload, dtype=_np.uint8, count=-1, offset=i)
+        if data.size < n:
+            raise ValueError(
+                f"truncated raster: {data.size} bytes for {width}x{height}")
+        return width, height, data[:n].reshape(height, width, 3)
+
+    return encode_ppm, decode_ppm
+
+
+encode_ppm, decode_ppm = _ppm_impl()
+
+
+def ppm_media_table(docs: DataFrame) -> DataFrame:
+    """REAL image payloads: one genuine P6 PPM per document, PPM_WIDTH
+    wide, with the `_ramp` pixel pattern (min 1 row) — a spec-compliant
+    file any netpbm reader decodes, whose channel sums an external
+    engine can replay from (doc_id, n_chars) alone."""
+    return _media_table(docs, "ppm_media_table", PPM_WIDTH, _ramp(1),
+                        encode_ppm)
+
+
+def ppm_features(media: DataFrame) -> DataFrame:
+    """Channel sums through the REAL P6 decoder (magic, header grammar,
+    raster length validation) — no fake decode anywhere on this path."""
+    return _channel_features(media, decode_ppm)
+
+
+# ------------------------------------------- real BMP (24-bit) codec
+
+BMP_WIDTH = 15          # odd*3 row bytes => non-zero row padding is
+                        # exercised on every payload (unlike width 16)
+
+
+def _bmp_impl():
+    """Factory for the uncompressed 24-bit BMP codec pair."""
+
+    def encode_bmp(width: int, height: int, flat_rgb) -> bytes:
+        """Spec-compliant uncompressed 24-bit BMP encoder
+        (BITMAPINFOHEADER): 14-byte file header + 40-byte info header +
+        BOTTOM-UP rows of BGR pixels each padded to a 4-byte boundary —
+        the layout every image viewer since Windows 3.x decodes.
+        `flat_rgb` is the raster in natural RGB top-down order (same
+        convention as encode_ppm)."""
+        import numpy as _np
+        data = _np.asarray(flat_rgb, dtype=_np.uint8)
+        if data.size != width * height * 3:
+            raise ValueError(
+                f"raster size {data.size} != {width}x{height}x3")
+        rows = data.reshape(height, width, 3)[:, :, ::-1]  # RGB -> BGR
+        pad = (-width * 3) % 4
+        stride = width * 3 + pad
+        body = _np.zeros((height, stride), dtype=_np.uint8)
+        body[:, :width * 3] = rows.reshape(height, width * 3)
+        pixels = body[::-1].tobytes()                      # bottom-up rows
+        offset = 14 + 40
+        size = offset + len(pixels)
+        hdr = (b"BM" + size.to_bytes(4, "little") + b"\x00\x00\x00\x00"
+               + offset.to_bytes(4, "little")
+               + (40).to_bytes(4, "little")
+               + width.to_bytes(4, "little")
+               + height.to_bytes(4, "little", signed=True)
+               + (1).to_bytes(2, "little")                 # planes
+               + (24).to_bytes(2, "little")                # bpp
+               + (0).to_bytes(4, "little")                 # BI_RGB
+               + len(pixels).to_bytes(4, "little")
+               + (2835).to_bytes(4, "little") * 2          # 72 DPI
+               + (0).to_bytes(4, "little") * 2)
+        return hdr + pixels
+
+    def decode_bmp(payload: bytes):
+        """REAL pure-numpy 24-bit BMP decoder (no codec libs): validates
+        the 'BM' magic, reads the pixel-data offset, requires
+        BITMAPINFOHEADER (or larger) with planes=1, bpp=24,
+        compression=BI_RGB, strips the per-row 4-byte padding, flips
+        bottom-up rows (negative height = top-down, also per spec),
+        converts BGR back to RGB and returns (width, height,
+        ndarray[h, w, 3] of uint8).  Raises ValueError on malformed
+        headers or a truncated pixel array; reference semantics: the
+        public Windows BITMAPFILEHEADER/BITMAPINFOHEADER layout."""
+        import numpy as _np
+        if payload[:2] != b"BM":
+            raise ValueError("not a BMP ('BM' magic missing)")
+        if len(payload) < 54:
+            raise ValueError("truncated BMP header")
+        offset = int.from_bytes(payload[10:14], "little")
+        hdr_size = int.from_bytes(payload[14:18], "little")
+        if hdr_size < 40:
+            raise ValueError(f"unsupported DIB header size {hdr_size}")
+        width = int.from_bytes(payload[18:22], "little", signed=True)
+        height = int.from_bytes(payload[22:26], "little", signed=True)
+        planes = int.from_bytes(payload[26:28], "little")
+        bpp = int.from_bytes(payload[28:30], "little")
+        compression = int.from_bytes(payload[30:34], "little")
+        if planes != 1 or bpp != 24 or compression != 0:
+            raise ValueError(
+                f"only uncompressed 24-bit BMP supported "
+                f"(planes={planes}, bpp={bpp}, compression={compression})")
+        top_down = height < 0
+        height = abs(height)
+        if width <= 0 or height == 0:
+            raise ValueError(f"bad dimensions {width}x{height}")
+        stride = (width * 3 + 3) & ~3
+        n = stride * height
+        data = _np.frombuffer(payload, dtype=_np.uint8, count=-1,
+                              offset=offset)
+        if data.size < n:
+            raise ValueError(
+                f"truncated pixel array: {data.size} bytes for "
+                f"{width}x{height} (stride {stride})")
+        rows = data[:n].reshape(height, stride)[:, :width * 3]
+        if not top_down:
+            rows = rows[::-1]
+        return width, height, rows.reshape(height, width, 3)[:, :, ::-1]
+
+    return encode_bmp, decode_bmp
+
+
+encode_bmp, decode_bmp = _bmp_impl()
+
+
+def bmp_media_table(docs: DataFrame) -> DataFrame:
+    """REAL image payloads, BMP flavor: one genuine uncompressed 24-bit
+    BMP per document, BMP_WIDTH wide, with the SAME `_ramp` pixel
+    pattern as ppm_media_table (min 1 row), so an external engine
+    replays channel sums from (doc_id, n_chars) alone, while the bytes
+    on the wire exercise the BGR / bottom-up / row-padding layout the
+    PPM path never touches."""
+    return _media_table(docs, "bmp_media_table", BMP_WIDTH, _ramp(1),
+                        encode_bmp)
+
+
+def bmp_features(media: DataFrame) -> DataFrame:
+    """Channel sums through the REAL BMP decoder (header, stride,
+    bottom-up rows, BGR order)."""
+    return _channel_features(media, decode_bmp)
 
 
 # --------------------------------------------- real PNG (deflate) codec
@@ -500,12 +395,7 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
 def _png_impl():
-    """Factory for the PNG codec pair.  Deliberately NOT plain
-    module-level functions: the mapInPandas closures below capture
-    them, and factory-local functions are cloudpickled BY VALUE (their
-    qualname is not importable), so Python workers on a real cluster
-    need no ozone_spark on their path — the same self-containment rule
-    the PPM/BMP closures follow by inlining."""
+    """Factory for the 8-bit truecolor PNG codec pair."""
 
     def encode_png(width: int, height: int, flat_rgb) -> bytes:
         """Spec-compliant PNG encoder for 8-bit truecolor (color type
@@ -654,82 +544,25 @@ def _png_impl():
 encode_png, decode_png = _png_impl()
 
 
-def png_media_table(docs: DataFrame, width: int = PNG_WIDTH) -> DataFrame:
+def png_media_table(docs: DataFrame) -> DataFrame:
     """REAL image payloads, PNG flavor: one genuine deflate-compressed
-    8-bit truecolor PNG per document, sized by n_chars (height =
-    ceil(n_chars / (width*3)), min 5 so the r % 5 filter rule covers
-    all five filter types in every file) with the SAME deterministic
-    pixel pattern as the PPM/BMP twins — flat_rgb[i] = (doc_id + i) %
-    256 — so an external engine replays channel sums from (doc_id,
-    n_chars) alone while the wire bytes exercise chunk CRCs, deflate,
-    and scanline filtering.  Arrow-batched mapInPandas."""
-    w = width
-    out_cols = [f.name for f in MEDIA_SCHEMA]
-    encode = encode_png  # self-contained by value via cloudpickle
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in it:
-            payloads, lens = [], []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                h = max(5, (int(n_chars) + w * 3 - 1) // (w * 3))
-                n = w * h * 3
-                flat = ((_np.arange(n, dtype=_np.int64) + int(doc_id))
-                        % 256).astype(_np.uint8)
-                p = encode(w, h, flat)
-                payloads.append(p)
-                lens.append(len(p))
-            yield _pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "media_type": ["image"] * len(payloads),
-                "payload": payloads,
-                "payload_len": _np.asarray(lens, dtype=_np.int64),
-            }, columns=out_cols)
-
-    # Slot-cached (r11 optimization round): the encoded payload table
-    # is FIXTURE SYNTHESIS — in production the media bytes are the
-    # stored input, not re-encoded per query — so repeated queries over
-    # the same docs probe one resident copy instead of re-running the
-    # Python encode pass per invocation (plan-keyed sameSemantics
-    # reuse; a different docs plan still evicts and rebuilds).
-    from .dedup import _slot_cache
-    return _slot_cache(
-        _spread(docs.select("doc_id", "n_chars"))
-        .mapInPandas(batches, schema=MEDIA_SCHEMA),
-        f"media_tbl_{batches.__qualname__.split('.')[0]}_{w}")
+    8-bit truecolor PNG per document, PNG_WIDTH wide, with the SAME
+    `_ramp` pixel pattern as the PPM/BMP twins but min 5 rows, so the
+    r % 5 filter rule covers all five filter types in every file; an
+    external engine replays channel sums from (doc_id, n_chars) alone
+    while the wire bytes exercise chunk CRCs, deflate, and scanline
+    filtering."""
+    return _media_table(docs, "png_media_table", PNG_WIDTH, _ramp(5),
+                        encode_png)
 
 
 def png_features(media: DataFrame) -> DataFrame:
-    """Per-image channel statistics through the REAL PNG decoder
-    (signature, chunk CRCs, IHDR validation, inflate, all five
-    scanline filters) reduced to exact integer per-channel RGB sums —
-    same output schema as ppm_features/bmp_features.  Scale shape:
-    map-only Arrow batches; no shuffle until the caller aggregates."""
-    out_cols = [f.name for f in PPM_FEATURE_SCHEMA]
-    decode = decode_png  # shipped by value (module-level, cloudpickle)
+    """Channel sums through the REAL PNG decoder (signature, chunk
+    CRCs, IHDR validation, inflate, all five scanline filters)."""
+    return _channel_features(media, decode_png)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
 
-        for pdf in it:
-            rows = {c: [] for c in out_cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, arr = decode(bytes(payload))
-                sums = arr.reshape(-1, 3).sum(axis=0, dtype=_np.int64)
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixels"].append(w * h)
-                rows["sum_r"].append(int(sums[0]))
-                rows["sum_g"].append(int(sums[1]))
-                rows["sum_b"].append(int(sums[2]))
-            yield _pd.DataFrame(rows, columns=out_cols)
-
-    return media.mapInPandas(batches, schema=PPM_FEATURE_SCHEMA)
-
+# ------------------------------------------- real JPEG (baseline) codec
 
 JPEG_WIDTH = 24         # 3 MCU columns; distinct from PPM/BMP/PNG widths.
                         # Baseline JPEG operates on 8x8 blocks, so the
@@ -739,9 +572,7 @@ JPEG_WIDTH = 24         # 3 MCU columns; distinct from PPM/BMP/PNG widths.
 def _jpeg_impl():
     """Factory for the baseline-sequential JPEG codec pair — the fourth
     and last stdlib-feasible REAL media format (VERDICT r9 item 6;
-    PPM/BMP/PNG are the other three).  Same by-value cloudpickle rule
-    as _png_impl: factory-locals so cluster Python workers need no
-    ozone_spark import.
+    PPM/BMP/PNG are the other three).
 
     Realness: the encoder runs the full baseline pipeline — level
     shift, float64 2-D DCT-II per 8x8 block, quantization, zigzag,
@@ -1111,10 +942,10 @@ def _jpeg_impl():
 encode_jpeg, decode_jpeg = _jpeg_impl()
 
 
-def jpeg_media_table(docs: DataFrame, width: int = JPEG_WIDTH) -> DataFrame:
+def jpeg_media_table(docs: DataFrame) -> DataFrame:
     """REAL image payloads, JPEG flavor: one spec-valid baseline
     sequential JPEG per document.  Raster dims are block-aligned
-    (width 24 = 3 MCU columns; height = ceil(n_chars / (width*3))
+    (JPEG_WIDTH = 3 MCU columns; height = ceil(n_chars / (width*3))
     rounded UP to a multiple of 8, min 16 so every file has >= 6
     blocks) and each 8x8 block is CONSTANT per channel with value
     (doc_id + 3*block_idx + channel) % 256 — the one raster family a
@@ -1122,76 +953,27 @@ def jpeg_media_table(docs: DataFrame, width: int = JPEG_WIDTH) -> DataFrame:
     quant), so the DuckDB oracle replays channel sums from (doc_id,
     n_chars) alone while signature, marker stream, Huffman coding,
     byte stuffing, dequant and the full float IDCT all really run."""
-    w = width
-    out_cols = [f.name for f in MEDIA_SCHEMA]
-    encode = encode_jpeg  # self-contained by value via cloudpickle
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def raster(doc_id: int, n_chars: int, width: int):
         import numpy as _np
-        import pandas as _pd
+        bw = width // 8
+        rows = (n_chars + width * 3 - 1) // (width * 3)
+        h = max(16, (rows + 7) // 8 * 8)
+        bi = _np.arange(bw * (h // 8), dtype=_np.int64)
+        vals = ((doc_id + 3 * bi[:, None] + _np.arange(3)) % 256) \
+            .astype(_np.uint8)
+        blocks = _np.broadcast_to(vals[:, None, None, :], (bi.size, 8, 8, 3))
+        return h, (blocks.reshape(h // 8, bw, 8, 8, 3)
+                   .transpose(0, 2, 1, 3, 4).reshape(-1))
 
-        bw = w // 8
-        for pdf in it:
-            payloads, lens = [], []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                rows = (int(n_chars) + w * 3 - 1) // (w * 3)
-                h = max(16, (rows + 7) // 8 * 8)
-                bi = _np.arange(bw * (h // 8), dtype=_np.int64)
-                vals = ((int(doc_id) + 3 * bi[:, None]
-                         + _np.arange(3)) % 256).astype(_np.uint8)
-                blocks = _np.broadcast_to(
-                    vals[:, None, None, :], (bi.size, 8, 8, 3))
-                raster = (blocks.reshape(h // 8, bw, 8, 8, 3)
-                          .transpose(0, 2, 1, 3, 4).reshape(h, w, 3))
-                p = encode(w, h, raster.reshape(-1))
-                payloads.append(p)
-                lens.append(len(p))
-            yield _pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "media_type": ["image"] * len(payloads),
-                "payload": payloads,
-                "payload_len": _np.asarray(lens, dtype=_np.int64),
-            }, columns=out_cols)
-
-    # Slot-cached (r11 optimization round): the encoded payload table
-    # is FIXTURE SYNTHESIS — in production the media bytes are the
-    # stored input, not re-encoded per query — so repeated queries over
-    # the same docs probe one resident copy instead of re-running the
-    # Python encode pass per invocation (plan-keyed sameSemantics
-    # reuse; a different docs plan still evicts and rebuilds).
-    from .dedup import _slot_cache
-    return _slot_cache(
-        _spread(docs.select("doc_id", "n_chars"))
-        .mapInPandas(batches, schema=MEDIA_SCHEMA),
-        f"media_tbl_{batches.__qualname__.split('.')[0]}_{w}")
+    return _media_table(docs, "jpeg_media_table", JPEG_WIDTH, raster,
+                        encode_jpeg)
 
 
 def jpeg_features(media: DataFrame) -> DataFrame:
-    """Per-image channel statistics through the REAL baseline JPEG
-    decoder — same output schema as ppm/bmp/png_features.  Map-only
-    Arrow batches; no shuffle until the caller aggregates."""
-    out_cols = [f.name for f in PPM_FEATURE_SCHEMA]
-    decode = decode_jpeg  # shipped by value (module-level, cloudpickle)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in it:
-            rows = {c: [] for c in out_cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, arr = decode(bytes(payload))
-                sums = arr.reshape(-1, 3).sum(axis=0, dtype=_np.int64)
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixels"].append(w * h)
-                rows["sum_r"].append(int(sums[0]))
-                rows["sum_g"].append(int(sums[1]))
-                rows["sum_b"].append(int(sums[2]))
-            yield _pd.DataFrame(rows, columns=out_cols)
-
-    return media.mapInPandas(batches, schema=PPM_FEATURE_SCHEMA)
+    """Channel sums through the REAL baseline JPEG decoder (marker
+    stream, Huffman entropy decode, dequant, float IDCT)."""
+    return _channel_features(media, decode_jpeg)
 
 
 def extract_features(media: DataFrame, fake_decode: bool = True) -> DataFrame:
@@ -1200,9 +982,6 @@ def extract_features(media: DataFrame, fake_decode: bool = True) -> DataFrame:
     batch shape and output schema are the real production plumbing; only
     the decoder inside is the deterministic fake."""
 
-    # NOTE: the closure must be self-contained (locals + builtins only) so
-    # cloudpickle ships it by value — Python workers on a real cluster do
-    # not have ozone_spark importable.
     n_bins = N_HIST_BINS
     out_cols = [f.name for f in FEATURE_SCHEMA]
     fake = fake_decode
@@ -1422,8 +1201,6 @@ def payload_chunks(media: DataFrame) -> DataFrame:
     win, mod = CHUNK_WINDOW, CHUNK_MOD
     out_cols = [f.name for f in CHUNK_SCHEMA]
 
-    # NOTE: self-contained closure (locals + builtins only) — see
-    # extract_features.
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib as _hl
 
@@ -1464,11 +1241,6 @@ def payload_chunks(media: DataFrame) -> DataFrame:
     return _spread(media).mapInPandas(batches, schema=CHUNK_SCHEMA)
 
 
-# one-slot cache for the chunk table of the most recent
-# payload_chunk_near_dup invocation (see its docstring)
-# (chunk-table residency moved to dedup._slot_cache "payload_chunks")
-
-
 def payload_chunk_near_dup(
         media: DataFrame,
         threshold: float = CHUNK_JACCARD_THRESHOLD,
@@ -1491,7 +1263,6 @@ def payload_chunk_near_dup(
     sf0.1 was the per-call rebuild).  sameSemantics reuse keeps one
     resident copy per distinct input plan — the same bounded residency
     contract, minus the same-input rebuild."""
-    from .dedup import _slot_cache
     ch = _slot_cache(
         payload_chunks(media).select("doc_id", "chunk_md5").distinct(),
         "payload_chunks")
